@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 /** Plan auditor: prints `explain("formatted")` for each query (or the
   * names given as args) so pushdown / broadcast / codegen spans can be
   * inspected. `sbt "runMain graft.Explain [sfDir] [conf:k=v...] [name...]"`
-  * — `conf:` args set session confs (e.g.
-  * `conf:spark.graft.sharedKernelCutBytes=0` dumps the forced-gate arm). */
+  * — `conf:` args set session confs (e.g. `conf:<key>=0` with the
+  * shared-kernel cut key dumps the forced-gate plans). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

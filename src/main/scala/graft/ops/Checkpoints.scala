@@ -7,10 +7,10 @@ import org.apache.spark.sql.DataFrame
   * Default is `localCheckpoint` (eager): blocks live on executor local
   * storage — fast, and correct for single-job local pipelines, but NOT
   * fault-tolerant (a lost executor invalidates the blocks and fails the
-  * query). For multi-hour cluster runs set
-  * `spark.graft.checkpoint.dir` to an HDFS/object-store path and every
-  * [[cut]] becomes a RELIABLE `checkpoint()` that survives executor loss,
-  * at the cost of one distributed write per cut.
+  * query). For multi-hour cluster runs set [[DirConf]] to an
+  * HDFS/object-store path and every [[cut]] becomes a RELIABLE
+  * `checkpoint()` that survives executor loss, at the cost of one
+  * distributed write per cut.
   *
   * The SparkContext checkpoint dir is set on first use (Spark appends a
   * per-context UUID subdirectory); a session keeps its first resolved

@@ -111,244 +111,10 @@ object Dedup {
   private[ops] def observeCap(sizes: DataFrame, sizeCol: Column,
                               cap: Int, what: String = "bucket"): DataFrame = {
     CapMetrics.ensureListener(sizes.sparkSession)
-    if (sys.env.contains("SPARK_GRAFT_NO_CAP_OBSERVE")) sizes
-    else sizes.observe(
+    sizes.observe(
       s"${CapMetrics.MetricPrefix}_${what}_${capObsId.incrementAndGet()}",
       sum(when(sizeCol > cap, 1L).otherwise(0L)).as("capped_groups"),
       max(sizeCol).as("max_group"))
-  }
-
-  /** Shuffle width for a stage whose input EXPLODES (one row per token /
-    * gram / shingle): the session default, GROWN — never shrunk — when
-    * the estimated exploded row count would overload the default's
-    * per-partition sort buffers. The ×128 probe measured the failure
-    * mode both ways: 16 partitions × ~128 M exploded gram rows
-    * sort-spilled decontamination 12× (41.3 s → 3.31 s once widened,
-    * PROBE.md round 8), while at ×32 the session default was FASTER than
-    * an oversized width (task overhead) — hence the floor. A real
-    * cluster sizes `spark.sql.shuffle.partitions` to the data; local
-    * mode defaults it to the core count, so data-sized operators must
-    * widen themselves.
-    *
-    * The estimate is bytes-based — optimizer stats of the text-bearing
-    * input (parquet file size, in-memory relation size, or local-relation
-    * estimate), one exploded row per ~6 input bytes (token + separator) —
-    * so it costs no job. Checkpointed inputs keep their origin stats
-    * (Spark carries them into the LogicalRDD). Target rows per partition
-    * via `spark.graft.shuffle.rowsPerPartition` (default 1 M ≈ tens of MB
-    * of sort input per task at gram-row widths). */
-  /** Sum of the LEAF byte estimates feeding `src` — the input-volume
-    * proxy both [[explodedShuffleParts]] and [[widenKernelStage]] size
-    * from (never top-of-plan stats: Spark's size-only visitor estimates
-    * a join's output as the PRODUCT of its children). Joins sum their
-    * children, leaves report their stats, unknown stats count 0. */
-  private def leafPlanBytes(src: DataFrame): BigInt = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LeafNode, LogicalPlan}
-    def sane(b: BigInt): BigInt =
-      // unknown stats surface as defaultSizeInBytes (Long.MaxValue) —
-      // treat as "no estimate" rather than exploding to the cap
-      if (b <= 0 || b >= BigInt(Long.MaxValue) / 2) BigInt(0) else b
-    def planBytes(p: LogicalPlan): BigInt = p match {
-      case j: Join => j.children.map(planBytes).sum
-      case l: LeafNode => sane(try l.stats.sizeInBytes
-        catch { case _: Exception => BigInt(0) })
-      case o if o.children.nonEmpty => o.children.map(planBytes).sum
-      case _ => BigInt(0)
-    }
-    try planBytes(src.queryExecution.optimizedPlan)
-    catch { case _: Exception => BigInt(0) }
-  }
-
-  /** Max partition count among lineage-cut ([[org.apache.spark.sql.execution.LogicalRDD]])
-    * leaves of `src`'s optimized plan — 0 when none. A checkpointed
-    * frame's PARALLELISM is its RDD's partition count, while its leaf
-    * STATS still carry the origin plan's (possibly join-inflated) byte
-    * estimate (verify skill, round-13 gotcha) — so width decisions on
-    * cut inputs must consult the real RDD width, not bytes/splitSize. */
-  private def leafRddMaxParts(src: DataFrame): Int = {
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.LogicalRDD
-    def walk(p: LogicalPlan): Int = p match {
-      case l: LogicalRDD =>
-        try l.rdd.getNumPartitions catch { case _: Exception => 0 }
-      case o => if (o.children.isEmpty) 0
-                else o.children.map(walk).max
-    }
-    try walk(src.queryExecution.optimizedPlan)
-    catch { case _: Exception => 0 }
-  }
-
-  /** Runtime-conf parse with a clear failure: a typo'd value (e.g.
-    * bytesPerTask="256k") must name the conf key at the call boundary,
-    * not throw a bare NumberFormatException from deep inside a widened
-    * production query (ADVICE r17). */
-  private def confLong(spark: SparkSession, key: String,
-                       default: String): Long = {
-    val raw = spark.conf.get(key, default)
-    try raw.trim.toLong
-    catch { case _: NumberFormatException =>
-      throw new IllegalArgumentException(
-        s"conf $key must be a long, got '$raw'")
-    }
-  }
-
-  private def confBool(spark: SparkSession, key: String,
-                       default: String): Boolean = {
-    val raw = spark.conf.get(key, default)
-    raw.trim.toLowerCase match {
-      case "true" => true
-      case "false" => false
-      case _ => throw new IllegalArgumentException(
-        s"conf $key must be true|false, got '$raw'")
-    }
-  }
-
-  /** Widen the CPU-dense per-document KERNEL stage (shingle + 64-way
-    * minhash) above the file scan. Without this the kernel's parallelism
-    * is the parquet SPLIT count — a sub-128 MB documents file is a
-    * handful of splits on any cluster, so the most expensive per-byte
-    * work in the operator serializes onto 1–9 cores no matter how many
-    * executors exist (measured: the minhash front end was near-CONSTANT
-    * ~17 s across sf0.1/sf1.0/sf3 — PROBE.md round 16 frontwidth family;
-    * widening cut the sf1.0 front 3.85 → 2.5 s warm, 10.5 → 4.7 s cold).
-    *
-    * The round-robin exchange of the raw (id, text) rows is linear in
-    * input bytes and far cheaper per byte than the kernel, but it is NOT
-    * free at 100 TB — so it only fires when the scan is narrower than
-    * the session shuffle width (a large corpus already scans thousands
-    * of splits and passes through untouched). The 1 MiB floor keeps
-    * micro-fixture plans (unit tests, the sf0.01 gate) byte-identical:
-    * below it the kernel is sub-core-second and the exchange's fixed
-    * cost dominates. Inputs behind a lineage cut keep their ORIGIN byte
-    * estimate in the LogicalRDD leaf (round-13 gotcha — NOT 0 bytes, as
-    * this doc once claimed), while their actual parallelism is the
-    * checkpointed RDD's partition count — so that count joins scanParts
-    * in the already-wide test: a 32-wide cut frame passes through
-    * untouched instead of paying a redundant round-robin exchange
-    * (ADVICE r17 — e.g. qualityFilter(s1) inside CorpusCuration.curate),
-    * while a genuinely narrow cut frame still widens.
-    *
-    * The widened width is PROPORTIONAL to input bytes, not a jump to the
-    * session default: `ceil(bytes / widenKernel.bytesPerTask)` capped at
-    * the default and floored above the scan width. Jump-to-target
-    * over-widened the SMALL tier — at sf0.1 the 1.17 MB dup'd bench
-    * corpus got 32 near-empty kernel tasks, regressing doc_pagerank
-    * 3.75 → 4.68 s (ADVICE r16) because the iterative tail re-planned
-    * off the wider front; proportional sizing keeps the small tier
-    * near its old plan while corpora a task-width past the floor still
-    * reach the full session width. Tiers at/above sf1.0 are unaffected
-    * (their byte estimates already exceed target × bytesPerTask).
-    *
-    * Conf (runtime-settable, probe/A-B levers):
-    *   - `spark.graft.widenKernel` (default true): disable to measure
-    *     the pre-widening plan (Probe frontwidth/kernelwidth families).
-    *   - `spark.graft.widenKernel.bytesPerTask` (default 256 KiB;
-    *     <= 0 = legacy jump-to-target): compressed-parquet bytes of
-    *     kernel input per widened task.
-    *
-    * `callerBytesPerTask` overrides the conf default (still subject to
-    * the on/off lever and the conf's <= 0 jump-to-target A/B arm) for
-    * kernels whose per-INPUT-byte cost is amplified beyond the text
-    * kernels the default is calibrated for — e.g. the semantic
-    * decontamination exact path does |eval| cosine folds per corpus
-    * row inside the broadcast-NL stage. */
-  private[graft] def widenKernelStage(df: DataFrame,
-                                      callerBytesPerTask: Long = -1L
-                                     ): DataFrame = {
-    val spark = df.sparkSession
-    val conf = spark.sessionState.conf
-    if (!confBool(spark, "spark.graft.widenKernel", "true"))
-      return df
-    val target = conf.numShufflePartitions
-    val bytes = leafPlanBytes(df)
-    // effective current width: file-split count for scans, the real RDD
-    // partition count for lineage-cut (LogicalRDD) leaves — whose byte
-    // stats carry the ORIGIN estimate, not their post-shuffle width
-    val curWidth = (bytes / BigInt(conf.filesMaxPartitionBytes.max(1L)))
-      .max(BigInt(leafRddMaxParts(df)))
-    if (bytes >= BigInt(1L << 20) && curWidth < target) {
-      val confPerTask = confLong(spark,
-        "spark.graft.widenKernel.bytesPerTask", "262144")
-      val perTask =
-        if (confPerTask <= 0L) confPerTask // jump-to-target A/B arm
-        else if (callerBytesPerTask > 0L) callerBytesPerTask
-        else confPerTask
-      val parts =
-        if (perTask <= 0L) target
-        else ((bytes + perTask - 1) / perTask)
-          .min(target).max(curWidth + 1).toInt
-      df.repartition(parts)
-    } else df
-  }
-
-  /** Checkpoint a shared-kernel frame ONLY when the source corpus is big
-    * enough that re-running the per-byte kernel once per consumer costs
-    * more than one materialization job. Below the threshold the lazy
-    * two-pass plan is kept byte-identical (same posture as
-    * widenKernelStage's 1 MiB floor): at bench scales a localCheckpoint
-    * job costs ~0.2-0.4 s, which is MORE than a second tokenize of a
-    * sub-MB corpus, while at 100 TB the duplicated kernel pass dominates
-    * by orders of magnitude. `spark.graft.sharedKernelCutBytes` (default
-    * 64 MiB) moves the boundary. */
-  private[graft] def cutSharedKernel(df: DataFrame,
-                                     src: DataFrame): DataFrame =
-    if (sharedKernelCutOk(src)) Checkpoints.cut(df) else df
-
-  /** Whether the shared-kernel gate is open for `src` — exposed separately
-    * so operators can hang ALL of their eager machinery (materialization
-    * jobs, driver-side scalar probes, broadcast-size measurements) off one
-    * condition instead of paying any driver-blocking job on a sub-gate
-    * corpus (r19 verdict #1: the ungated minhash signature cut plus its
-    * per-call verify aggregate regressed the whole family in-suite). */
-  private[graft] def sharedKernelCutOk(src: DataFrame): Boolean = {
-    val minBytes = confLong(src.sparkSession,
-      "spark.graft.sharedKernelCutBytes", (64L << 20).toString)
-    minBytes >= 0 && leafPlanBytes(src) >= BigInt(minBytes)
-  }
-
-  private[graft] def explodedShuffleParts(src: DataFrame,
-                                          bytesPerRow: Long = 6L): Int = {
-    val spark = src.sparkSession
-    val default = spark.sessionState.conf.numShufflePartitions
-    val target = confLong(spark,
-      "spark.graft.shuffle.rowsPerPartition", "1000000").max(1L)
-    // INPUT-volume estimate, not top-of-plan stats: Spark's
-    // size-only visitor estimates a join's output as the PRODUCT of its
-    // children's sizes, so a frame downstream of any equi-join reports
-    // petabytes for megabytes of data — measured pinning minhash stages
-    // to 32768 near-empty tasks (165 s on 100k rows, PROBE.md round 13).
-    // For width sizing the right proxy is the data VOLUME feeding the
-    // explode, which a join bounds by the SUM of its inputs — so joins
-    // sum, everything else passes through, leaves report their stats.
-    // (A join-estimate already swallowed by a lineage cut is invisible
-    // here — stage-boundary callers pass an explicit width instead, see
-    // minhashDupPairs.partsHint.)
-    // Deliberate trade: summing RAW leaf sizes ignores the projection/
-    // filter scaling the old top-of-plan stats applied, so a narrow
-    // select over a wide table estimates the full file and can OVER-pin
-    // width (more near-empty tasks). That error is bounded by the leaf's
-    // real bytes — cheap scheduling overhead — while the product error
-    // it replaces was unbounded (petabytes from megabytes, 32768 tasks);
-    // in this codebase the explode sources are narrow (id, text)
-    // projections of narrow tables, so the gap stays small.
-    val bytes = leafPlanBytes(src)
-    val rows = bytes / bytesPerRow
-    val need = (rows / target + 1).min(32768).toInt
-    need.max(default)
-  }
-
-  /** Insert an explicit `repartition(keys)` sized by
-    * [[explodedShuffleParts]] ONLY when the estimate exceeds the session
-    * default: small inputs keep their original plan (AQE coalescing,
-    * broadcast choices untouched — the measured ×32 guard case), large
-    * ones get a pinned REPARTITION_BY_NUM exchange that the downstream
-    * aggregate/join on the same keys reuses. */
-  private def widenForExplosion(df: DataFrame, src: DataFrame,
-                                keys: Column*): DataFrame = {
-    val parts = explodedShuffleParts(src)
-    if (parts > df.sparkSession.sessionState.conf.numShufflePartitions)
-      df.repartition(parts, keys: _*)
-    else df
   }
 
   /** `pinnedParts = Some(n)` pins the bucket aggregation to an explicit
@@ -480,8 +246,8 @@ object Dedup {
     // the measured cause of the family's in-suite walls running 2-4× their
     // isolated medians at local[32] (r19 verdict #1).
     val gateDf = gateSrc.getOrElse(df)
-    val doCut = sharedKernelCutOk(gateDf)
-    val sig = widenKernelStage(df)
+    val doCut = Sizing.sharedKernelCutOk(gateDf)
+    val sig = Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), shingleHashes64(text, n).as("sh"))
     val base = if (doCut) Checkpoints.cut(sig) else sig
     // set size rides in the bucket id struct (doc_id first, so pair order
@@ -502,19 +268,19 @@ object Dedup {
     // grows with the corpus (same posture as the gram-stream operators)
     val pairs = bucketPairs(banded, col("did"), maxBucket,
         pinnedParts = Some(partsHint.getOrElse(
-          explodedShuffleParts(df, bytesPerRow = 75L))),
+          Sizing.explodedShuffleParts(df, bytesPerRow = 75L))),
         pairFilter = Some(lengthFilter))
       .select(col("id_a.doc_id").as("id_a"), col("id_b.doc_id").as("id_b"))
     // Verify join shape (r19 opt, the jaccardPrefixPairs sf10 lesson): a
     // sort-merge/shuffled verify carries the id_a-side shingle ARRAY on
     // every candidate row through the id_b exchange — spill scales with
     // candidates × array bytes. The signature table is linear and small,
-    // so broadcast it (gated by spark.graft.verifyBroadcastBytes, default
+    // so broadcast it (gated by Sizing.VerifyBroadcastBytesConf, default
     // 2 GiB; <=0 or oversized keeps the keyed-join shape, whose spill is
     // aggregate across executors on a real cluster).
     val withSets =
-      if (verifyBroadcastOk(base, exact = doCut,
-          srcBytes = leafPlanBytes(gateDf)))
+      if (Sizing.verifyBroadcastOk(base, exact = doCut,
+          srcBytes = Sizing.leafPlanBytes(gateDf)))
         pairs
           .join(broadcast(base.select(col("doc_id").as("id_a"),
             col("sh").as("_sha"))), "id_a")
@@ -529,40 +295,6 @@ object Dedup {
     val verified = exactJaccardTail(withSets, "id_a", "id_b",
       jaccardThreshold)
     if (ordered) verified.orderBy("id_a", "id_b") else verified
-  }
-
-  /** Whether a (doc_id, sh) signature table fits the verify-broadcast
-    * budget (`spark.graft.verifyBroadcastBytes`, default 2 GiB; <=0
-    * disables).
-    *
-    * `exact = true` (the table is already materialized behind a lineage
-    * cut): size measured as count × 24 B + Σ|sh| × 8 B — one scalar
-    * aggregate over the checkpointed blocks, the same arithmetic the
-    * jaccard verify ships.
-    *
-    * `exact = false` (sub-gate corpus, nothing materialized): NO driver
-    * job — the r19 per-call `.head` aggregate here re-ran the shingle
-    * kernel eagerly on every family call and was half of verdict #1's
-    * in-suite regression. Bound the table from the source leaf bytes
-    * instead: ≤1 shingle hash (8 B) per ~2 raw text bytes plus the 24 B
-    * row struct, and parquet leaf stats under-report raw text by the
-    * compression ratio (≤4× on these corpora), so 8 × leaf bytes is a
-    * safe ceiling — a gate-closed (<64 MiB) corpus bounds at 512 MiB,
-    * always inside the 2 GiB default budget. Unknown stats (0) refuse the
-    * broadcast: the keyed-join shape is correct at any scale. */
-  private def verifyBroadcastOk(s: DataFrame, exact: Boolean,
-                                srcBytes: => BigInt): Boolean = {
-    val limit = confLong(s.sparkSession,
-      "spark.graft.verifyBroadcastBytes", (2L << 30).toString)
-    if (limit <= 0) false
-    else if (exact) {
-      val r = s.agg(count(lit(1)),
-        coalesce(sum(size(col("sh"))), lit(0L))).head
-      r.getLong(0) * 24L + r.getLong(1) * 8L <= limit
-    } else {
-      val b = srcBytes
-      b > 0 && b * 8 <= BigInt(limit)
-    }
   }
 
   /** EXACT all-pairs Jaccard self-join via prefix filtering (the
@@ -598,32 +330,19 @@ object Dedup {
     // exploded-row-aware width: equals the session default at bench/test
     // scales, grows with the corpus so the gram-stream shuffles below
     // never sort-spill through a core-count-sized width (PROBE.md r8)
-    val parts = explodedShuffleParts(docs)
-    // MEASURED MODE (r20): the staging machinery below — two lineage
+    val parts = Sizing.explodedShuffleParts(docs)
+    // MEASURED at every scale: the staging machinery below — two lineage
     // cuts, the pairVol scalar job, the exact verify-broadcast aggregate —
     // sizes/bounds the QUADRATIC candidate stages, whose volume leaf
     // bytes cannot predict (sf3: 1.13B candidates from 34 MB of parquet).
-    // `spark.graft.pairVolMinBytes` gates it on the corpus leaf size
-    // (default 0 = always measured: unlike the minhash family's linear
-    // verify machinery, the cuts here REUSE the df-rank window across the
-    // pairVol job and the pair plan, and an A/B at sf0.1 read the
-    // cut-free arm ~1 s SLOWER in-suite — 4.23 vs 3.08 — so the r18/r19
-    // measured shape stays the default at every scale; -1 disables
-    // measuring). An explicitly pinned positive spill budget forces
-    // measured mode regardless, so staging stays testable on tiny
-    // fixtures.
-    val srcBytes = leafPlanBytes(docs)
-    val volGate = confLong(docs.sparkSession,
-      "spark.graft.pairVolMinBytes", "0")
-    val budgetConf = confLong(docs.sparkSession,
-      "spark.graft.pairSpillBudget", "0")
-    val measured =
-      (volGate >= 0 && srcBytes >= BigInt(volGate)) || budgetConf > 0
+    // Unlike the minhash family's linear verify machinery it is not gated
+    // on corpus size: the cuts REUSE the df-rank window across the pairVol
+    // job and the pair plan, and an r20 A/B at sf0.1 read a cut-free
+    // variant ~1 s SLOWER in-suite (4.23 vs 3.08 s).
     // widenKernelStage: the cut below MATERIALIZES the shingle stream —
     // without widening, that job's parallelism is the file-split count
-    val s0 = widenKernelStage(docs)
-      .select(id.cast("long").as("doc_id"), shingleHashes64(text, n).as("sh"))
-    val s = if (measured) Checkpoints.cut(s0) else s0
+    val s = Checkpoints.cut(Sizing.widenKernelStage(docs)
+      .select(id.cast("long").as("doc_id"), shingleHashes64(text, n).as("sh")))
     // set size rides INSIDE the bucket id struct so the PPJoin length
     // filter — J ≥ t forces min(na,nb) ≥ t·(na+nb)/(1+t), exact, 1e-9
     // slack only ever keeps candidates — runs between pair generation and
@@ -637,10 +356,10 @@ object Dedup {
     // materialization. The stored stream is ~30% of the gram volume
     // (linear in corpus) — the price of sizing the quadratic stages
     // from MEASURED volume instead of a leaf-bytes guess.
-    val prefix0 = jaccardPrefixBuckets(s, threshold, partsOverride = Some(parts))
-      .select(col("band"), col("bucket"),
-        struct(col("doc_id"), col("nsh")).as("did"))
-    val prefix = if (measured) Checkpoints.cut(prefix0) else prefix0
+    val prefix = Checkpoints.cut(
+      jaccardPrefixBuckets(s, threshold, parts)
+        .select(col("band"), col("bucket"),
+          struct(col("doc_id"), col("nsh")).as("did")))
     // Pair-stage width from the MEASURED candidate volume, not leaf
     // bytes (r14 verdict #3, sf3 width audit): the pinned stages below
     // carry Σ_buckets n(n−1)/2 candidate rows — the sum-df² quadratic,
@@ -651,12 +370,8 @@ object Dedup {
     // sizes it exactly — PROBE.md round 15). Capped buckets are
     // excluded, matching what bucketPairs actually emits. Driver state:
     // ONE scalar.
-    val target = confLong(docs.sparkSession,
-      "spark.graft.shuffle.rowsPerPartition", "1000000").max(1L)
-    // unmeasured (sub-gate) corpora keep the leaf-based width: their
-    // candidate volume is bounded by (gate bytes)² worth of buckets and
-    // the session default width holds it comfortably
-    val pairVol = if (!measured) 0L else prefix
+    val target = Sizing.rowsPerPartition(docs.sparkSession)
+    val pairVol = prefix
       .groupBy("band", "bucket").agg(count(lit(1)).as("_n"))
       .filter(col("_n").between(2, maxBucket))
       .agg(coalesce(sum(col("_n") * (col("_n") - 1) / 2), lit(0L))
@@ -679,13 +394,13 @@ object Dedup {
     // for the 1M-doc dup'd sf10 corpus), so the Spark-first verify is two
     // BroadcastHashJoins against it — the quadratic stream stays map-side
     // after its dedup exchange and no shuffle ever carries an array.
-    // `spark.graft.verifyBroadcastBytes` (default 2 GiB; <=0 disables)
+    // Sizing.VerifyBroadcastBytesConf (default 2 GiB; <=0 disables)
     // gates the hint: beyond it (true corpus scale, where the signature
     // table outgrows executor memory) the sort-merge shape below is kept —
     // on a real cluster its spill is aggregate across executors, and the
     // staged passes bound it per wave.
-    val useBcast = verifyBroadcastOk(s, exact = measured,
-      srcBytes = srcBytes)
+    val useBcast = Sizing.verifyBroadcastOk(s, exact = true,
+      srcBytes = Sizing.leafPlanBytes(docs))
     // pin the expansion stages (pair generation, exact-Jaccard verify):
     // their shuffle INPUTS are small, so AQE coalescing would serialize
     // the quadratic work — same pathology as Linkage.blockedFuzzyPairs
@@ -742,12 +457,14 @@ object Dedup {
     // itself further (salted second hash — disjoint within the pass) when
     // the disk has shrunk under the plan. Sub-splits are output-identical:
     // same verify, same final distinct.
-    val spillBudget = pairSpillBudget(docs.sparkSession)
-    val maxPasses = confLong(docs.sparkSession,
-      "spark.graft.pairMaxPasses", "256").max(1L)
+    val spillBudget = Sizing.pairSpillBudget(docs.sparkSession)
+    val maxPasses = Sizing.pairMaxPasses(docs.sparkSession)
+    // a negative budget never stages; a zero one (a full spill dir)
+    // stages at the pass cap
     val passes =
-      if (!measured || spillBudget <= 0) 1
-      else math.min(maxPasses, pairVol * 96L / spillBudget + 1).toInt
+      if (spillBudget < 0) 1
+      else math.min(maxPasses,
+        pairVol * 96L / math.max(spillBudget, 1L) + 1).toInt
     if (passes <= 1) verified(prefix, pairParts).orderBy("id_a", "id_b")
     else {
       val w = math.max(parts, pairParts / passes + 1)
@@ -758,7 +475,7 @@ object Dedup {
             === lit(p.toLong))
         // live-disk guard: never plan a pass whose projected spill
         // exceeds half of what is usable RIGHT NOW
-        val usable = pairSpillUsable(docs.sparkSession)
+        val usable = Sizing.pairSpillUsable(docs.sparkSession)
         val sub =
           if (usable <= 0) 1
           else math.min(16L,
@@ -782,46 +499,14 @@ object Dedup {
     }
   }
 
-  /** Disk budget for one quadratic candidate stage's transient shuffle/
-    * sort spill. `spark.graft.pairSpillBudget`: bytes (>0), `-1` =
-    * unbounded (never stage), `0` (default) = a third of the shuffle
-    * dir's currently-usable space, floored at 8 GiB — deterministic
-    * enough per box while refusing to plan a spill into a full disk. */
-  private def pairSpillBudget(spark: SparkSession): Long = {
-    val conf = confLong(spark, "spark.graft.pairSpillBudget", "0")
-    if (conf != 0L) conf
-    else {
-      val dir = spark.conf.get("spark.local.dir",
-        System.getProperty("java.io.tmpdir", "/tmp")).split(",").head
-      math.max(new java.io.File(dir).getUsableSpace / 3, 8L << 30)
-    }
-  }
-
-  /** Live usable bytes in the spill dir, re-probed per staged pass (the
-    * budget above is composition-time; the disk is shared with dumps and
-    * oracle spill, so it can shrink under a running plan).
-    * `spark.graft.pairSpillUsable`: `-1` disables the per-pass guard,
-    * `>0` overrides the probe (test hook), `0` (default) = live probe. */
-  private def pairSpillUsable(spark: SparkSession): Long = {
-    val conf = confLong(spark, "spark.graft.pairSpillUsable", "0")
-    if (conf != 0L) { if (conf < 0) -1L else conf }
-    else {
-      val dir = spark.conf.get("spark.local.dir",
-        System.getProperty("java.io.tmpdir", "/tmp")).split(",").head
-      new java.io.File(dir).getUsableSpace
-    }
-  }
-
   /** The prefix-token candidate buckets behind [[jaccardPrefixPairs]], as
-    * a (band, bucket, doc_id) frame compatible with [[bucketPairs]] —
-    * exposed so the scale probe can measure the ACTUAL bucket-size
-    * distribution of the production code path (the df-ordered prefix is
-    * exactly the thing that could go quadratic on a boilerplate corpus).
-    * `s` is (doc_id: long, sh: array<long>). */
-  private[graft] def jaccardPrefixBuckets(s: DataFrame,
-                                          threshold: Double,
-                                          partsOverride: Option[Int] = None)
-      : DataFrame = {
+    * a (band, bucket, doc_id) frame compatible with [[bucketPairs]] (the
+    * df-ordered prefix is exactly the thing that could go quadratic on a
+    * boilerplate corpus). `s` is (doc_id: long, sh: array<long>); `parts`
+    * is the caller's exploded-row-aware width, estimated off the raw
+    * source (a checkpointed `s` carries origin stats). */
+  private[graft] def jaccardPrefixBuckets(s: DataFrame, threshold: Double,
+                                          parts: Int): DataFrame = {
     val tok = s.select(col("doc_id"), size(col("sh")).as("nsh"),
       explode(col("sh")).as("g"))
     val dfreq = tok.groupBy("g").agg(count(lit(1)).as("df"))
@@ -830,10 +515,6 @@ object Dedup {
     // explicit repartition: the exploded token stream is many rows but
     // few bytes, so AQE would coalesce the window's input shuffle down
     // to a couple of tasks and serialize the per-doc rank sort.
-    // Width from the caller (exploded-row-aware) when provided — the
-    // checkpointed `s` carries origin stats, but the caller's raw frame
-    // estimates straight off the source
-    val parts = partsOverride.getOrElse(explodedShuffleParts(s))
     tok.join(dfreq, "g")
       .repartition(parts, col("doc_id"))
       .withColumn("rn", row_number().over(w))
@@ -866,14 +547,15 @@ object Dedup {
                          n: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
                          jaccardThreshold: Double = 0.7,
                          maxBucket: Int = 1000): DataFrame = {
-    def side(df: DataFrame, s: Int) = widenKernelStage(df)
+    def side(df: DataFrame, s: Int) = Sizing.widenKernelStage(df)
       .select(lit(s).as("side"), id.cast("long").as("doc_id"),
         shingleHashes64(text, n).as("sh"))
     // checkpointed for the same reason as minhashDupPairs: three consumers
     // (banding + both verify sides), one kernel pass instead of three —
     // and gated for the same reason (r20): below the shared-kernel gate
     // the eager cut job costs more than re-running the kernel
-    val doCut = sharedKernelCutOk(existing) || sharedKernelCutOk(incoming)
+    val doCut =
+      Sizing.sharedKernelCutOk(existing) || Sizing.sharedKernelCutOk(incoming)
     val sides = side(existing, 0).union(side(incoming, 1))
     val base = if (doCut) Checkpoints.cut(sides) else sides
     // side-first struct keeps the cross-side filter two field tests; nsh
@@ -892,8 +574,8 @@ object Dedup {
         (a("nsh") + b("nsh")).cast("double") * lit(tf) - 1e-9
     val pairs = bucketPairs(banded, col("sid"), maxBucket,
         pinnedParts = Some(
-          explodedShuffleParts(existing, bytesPerRow = 75L)
-            .max(explodedShuffleParts(incoming, bytesPerRow = 75L))),
+          Sizing.explodedShuffleParts(existing, bytesPerRow = 75L)
+            .max(Sizing.explodedShuffleParts(incoming, bytesPerRow = 75L))),
         pairFilter = Some(lengthFilter))
       .filter(col("id_a.side") === 0 && col("id_b.side") === 1)
       .select(col("id_a.doc_id").as("existing_id"),
@@ -905,8 +587,9 @@ object Dedup {
     // broadcast-gated verify — no shuffle may carry a shingle array
     // (minhashDupPairs' sf10 rationale; same conf gate)
     val withSets =
-      if (verifyBroadcastOk(base, exact = doCut,
-          srcBytes = leafPlanBytes(existing) + leafPlanBytes(incoming)))
+      if (Sizing.verifyBroadcastOk(base, exact = doCut,
+          srcBytes = Sizing.leafPlanBytes(existing) +
+            Sizing.leafPlanBytes(incoming)))
         pairs.join(broadcast(exA), "existing_id")
           .join(broadcast(inB), "incoming_id")
       else
@@ -949,7 +632,7 @@ object Dedup {
     // is immediately gathered to the driver — pure overhead for any
     // query set past the 1 MiB floor (ADVICE r16)
     def sh(df: DataFrame, idAs: String, widen: Boolean) = {
-      val src = if (widen) widenKernelStage(df) else df
+      val src = if (widen) Sizing.widenKernelStage(df) else df
       src.filter(size(TextAnalytics.tokensCol(text)) >= n)
         .select(id.as(idAs), shingleHashes64(text, n).as("sh"))
     }
@@ -961,7 +644,7 @@ object Dedup {
     // corpus-exploded volume; widen it with the corpus when the estimate
     // demands (small corpora keep the original plan: broadcast join +
     // partial-agg exchange at the session default)
-    widenForExplosion(
+    Sizing.widenForExplosion(
       c.join(broadcast(q), "g")
         .filter(col("query_id") =!= col("doc_id")),
       corpus, col("query_id"), col("doc_id"))
@@ -1083,7 +766,7 @@ object Dedup {
     // one-split embeddings scan → ~2 s widened; the LSH path's banding
     // kernel shares the win). The eval side stays unwidened: it is
     // collected into a broadcast either way.
-    val c = widenKernelStage(corpus, callerBytesPerTask = 32L << 10)
+    val c = Sizing.widenKernelStage(corpus, bytesPerTask = 32L << 10)
       .select(id.as("vec_id"), vec.as("cv"))
     val q = evalSet.select(id.as("eval_id"), vec.as("qv"))
     val pairCos = lsh match {
@@ -1143,7 +826,7 @@ object Dedup {
     * `max_eval_cos_r` audit); at sf3 (3.9e13) LSH wins 25.0→4.3 s (5.8×);
     * at sf10 (4.3e14) 108.7→5.7 s (19×). Default threshold 1e13 — the
     * geometric midpoint of the bracketing tiers — overridable via
-    * `spark.graft.sdecon.autoBytesProduct`.
+    * [[Sizing.SdeconAutoBytesProductConf]].
     *
     * Route conservatism: an eval set carved from the corpus by a FILTER
     * inherits the full corpus byte estimate (size-only stats do not scale
@@ -1168,10 +851,9 @@ object Dedup {
                                 cosThreshold: Double = 0.95,
                                 planes: Int = 12,
                                 bands: Int = 24): DataFrame = {
-    val threshold = confLong(corpus.sparkSession,
-      "spark.graft.sdecon.autoBytesProduct", "10000000000000")
-    val cb = leafPlanBytes(corpus)
-    val eb = leafPlanBytes(evalSet)
+    val threshold = Sizing.sdeconAutoBytesProduct(corpus.sparkSession)
+    val cb = Sizing.leafPlanBytes(corpus)
+    val eb = Sizing.leafPlanBytes(evalSet)
     val useLsh = cb == 0 || eb == 0 || cb * eb > BigInt(threshold)
     semanticDecontaminate(corpus, evalSet, id, vec, cosThreshold,
       lsh = if (useLsh) Some((planes, bands)) else None)
@@ -1197,7 +879,8 @@ object Dedup {
                       bands: Int = 4, maxHamming: Int = 3,
                       maxBucket: Int = 1000): DataFrame =
     simhashBandedPairs(
-      widenKernelStage(df).select(id.as("doc_id"), simhash64(text).as("sim")),
+      Sizing.widenKernelStage(df)
+        .select(id.as("doc_id"), simhash64(text).as("sim")),
       bands, maxHamming, maxBucket)
 
   /** Banding + pigeonhole + Hamming-verify tail shared by [[simhashDupPairs]]
@@ -1315,7 +998,7 @@ object Dedup {
     // roughly an order of magnitude over the tokenize kernels the
     // 256 KiB default is calibrated for — the same caller-hint contract
     // the semantic-decontamination exact path uses.
-    val sims = widenKernelStage(df, callerBytesPerTask = 32768L)
+    val sims = Sizing.widenKernelStage(df, bytesPerTask = 32768L)
       .select(id.as("doc_id"),
         TextAnalytics.tokensCol(text).as("toks"))
       .filter(size(col("toks")) > 0)
@@ -1363,7 +1046,7 @@ object Dedup {
     // embedding rows are ~256 bytes (64-float vectors) fanning out `bands`
     // ways — one banded row per ~128 input bytes at the default 1–2 bands
     bucketPairs(banded, col("vec_id"), maxBucket,
-        pinnedParts = Some(explodedShuffleParts(df, bytesPerRow = 128L)))
+        pinnedParts = Some(Sizing.explodedShuffleParts(df, bytesPerRow = 128L)))
       .join(base.select(col("vec_id").as("id_a"), col("v").as("v_a")), "id_a")
       .join(base.select(col("vec_id").as("id_b"), col("v").as("v_b")), "id_b")
       .select(col("id_a"), col("id_b"),
@@ -1407,8 +1090,8 @@ object Dedup {
         col("bb.bucket").as("bucket"))
     bucketPairs(banded, col("sid"), maxBucket,
         pinnedParts = Some(
-          explodedShuffleParts(existing, bytesPerRow = 128L)
-            .max(explodedShuffleParts(incoming, bytesPerRow = 128L))))
+          Sizing.explodedShuffleParts(existing, bytesPerRow = 128L)
+            .max(Sizing.explodedShuffleParts(incoming, bytesPerRow = 128L))))
       .filter(col("id_a.side") === 0 && col("id_b.side") === 1)
       .select(col("id_a.vec_id").as("existing_id"),
         col("id_b.vec_id").as("incoming_id"))
@@ -1457,7 +1140,7 @@ object Dedup {
     // cutSharedKernel: the token frame feeds the gram pipeline AND the
     // final rebuild join — past the size gate the tokenizer runs once,
     // below it the lazy two-pass plan is kept (r19 opt)
-    val base = cutSharedKernel(widenKernelStage(docs)
+    val base = Sizing.cutSharedKernel(Sizing.widenKernelStage(docs)
       .select(id.as("doc_id"),
         coalesce(TextAnalytics.tokensCol(text), array()).as("_toks")), docs)
     val nt = size(col("_toks"))
@@ -1475,15 +1158,16 @@ object Dedup {
     // token position): widen each to the corpus-sized width when the
     // estimate exceeds the session default — at probe ×128 these are the
     // sort-spill sites the shuffle-partition override used to paper over
-    val dupGrams = widenForExplosion(
+    val dupGrams = Sizing.widenForExplosion(
         grams.select(col("doc_id"), col("_gram")), docs,
         col("doc_id"), col("_gram"))
       .distinct()
       .groupBy("_gram").agg(count(lit(1)).as("_nd"))
       .filter(col("_nd") >= minDocs)
       .select("_gram")
-    val covered = widenForExplosion(
-        widenForExplosion(grams, docs, col("_gram")).join(dupGrams, "_gram"),
+    val covered = Sizing.widenForExplosion(
+        Sizing.widenForExplosion(grams, docs, col("_gram"))
+          .join(dupGrams, "_gram"),
         docs, col("doc_id"))
       .groupBy("doc_id")
       .agg(array_distinct(flatten(collect_list(

@@ -158,8 +158,8 @@ object Graph {
                               maxIter: Int = 50): DataFrame =
     starContraction(edges, src, dst, maxIter)._1
 
-  /** [[connectedComponentsStar]] plus the converged round count — the
-    * probe/spec entry point (round growth is the scale contract). */
+  /** [[connectedComponentsStar]] plus the converged round count (round
+    * growth is the scale contract). */
   private[graft] def starContraction(edges: DataFrame, src: Column,
                                      dst: Column, maxIter: Int)
       : (DataFrame, Int) = {

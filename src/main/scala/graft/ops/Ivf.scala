@@ -159,44 +159,21 @@ object Ivf {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nProbe > 0 && nProbe <= nCells,
       s"nProbe must be in [1, nCells=$nCells], got $nProbe")
-    val (indexed, coarse) =
-      ivfAdcIndex(corpus, qid, qvec, cb, nCells, coarseIters)
-    ivfAdcSearch(indexed, coarse, queries, qid, qvec, cb, k, nProbe)
-  }
-
-  /** Build the IVFADC index: cell (nearest coarse centroid, ties lowest)
-    * and PQ codes computed in the SAME corpus scan — both pure maps
-    * against broadcast literals. Returns the LAZY indexed frame
-    * (item_id, cell, codes) plus the trained coarse centroids; callers
-    * that search repeatedly (the amortized regime the operator exists
-    * for) persist the indexed frame once, where [[ivfAdcTopK]] composes
-    * build + search for the registered one-shot query. */
-  def ivfAdcIndex(corpus: DataFrame, id: Column, vec: Column,
-                  cb: Pq.Codebooks, nCells: Int, coarseIters: Int)
-      : (DataFrame, IndexedSeq[Seq[Long]]) = {
-    val cq = corpus.select(id.as("item_id"),
-      Clustering.quantize(vec, cb.shift, cb.scale).as("q")).persist()
+    // index: cell (nearest coarse centroid, ties lowest) and PQ codes
+    // computed in the SAME corpus scan — both pure maps against broadcast
+    // literals
+    val cq = corpus.select(qid.as("item_id"),
+      Clustering.quantize(qvec, cb.shift, cb.scale).as("q")).persist()
     cq.count()
     val coarse = Clustering.lloyd(cq, nCells, coarseIters)
     val indexed = Clustering.assignTo(cq, coarse)
       .select(col("item_id"), col("cluster").as("cell"),
         Pq.codesFor(col("q"), cb).as("codes"))
     cq.unpersist(blocking = false)
-    (indexed, coarse)
-  }
-
-  /** Search an [[ivfAdcIndex]] index: each query probes its nProbe
-    * nearest coarse cells (exact integer dist2, ties to the lowest cell);
-    * survivors are ADC-scored against their 16-byte codes. The query side
-    * stays broadcast-sized; the index is scanned once per search batch
-    * with the cell filter applied BEFORE any ADC arithmetic, so the
-    * scoring cost is ≈ (nProbe/nCells)·|corpus| per query. */
-  def ivfAdcSearch(indexed: DataFrame, coarse: IndexedSeq[Seq[Long]],
-                   queries: DataFrame, qid: Column, qvec: Column,
-                   cb: Pq.Codebooks, k: Int, nProbe: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(nProbe > 0 && nProbe <= coarse.length,
-      s"nProbe must be in [1, nCells=${coarse.length}], got $nProbe")
+    // search: each query probes its nProbe nearest coarse cells (exact
+    // integer dist2, ties to the lowest cell); the cell filter applies
+    // BEFORE any ADC arithmetic, so survivors are scored against their
+    // 16-byte codes at ≈ (nProbe/nCells)·|corpus| per query
     val qq = queries.select(qid.as("query_id"),
       Clustering.quantize(qvec, cb.shift, cb.scale).as("q"))
     val qd = qq.select(col("query_id"), col("q"),

@@ -108,7 +108,7 @@ object Linkage {
     // exploded-row-aware width (floors at the session default): the
     // segment-replicated verify join scales with the record count, and a
     // cluster-sized corpus must not funnel it through a core-count width
-    val parts = Dedup.explodedShuffleParts(df, bytesPerRow = 30L)
+    val parts = Sizing.explodedShuffleParts(df, bytesPerRow = 30L)
     val smallPairs = a.repartition(parts, col("blk"), col("_seg"))
       .join(b.repartition(parts, col("blk"), col("_seg")),
         Seq("blk", "_seg"))
@@ -194,7 +194,7 @@ object Linkage {
     // ORIGINAL frame's leaf stats (recs sits behind the block-count
     // join, whose size-only estimate is a child PRODUCT — the r13
     // width pathology)
-    val parts = Dedup.explodedShuffleParts(src, bytesPerRow = 1L)
+    val parts = Sizing.explodedShuffleParts(src, bytesPerRow = 1L)
     val v = recs.filter(col("txt").isNotNull)
       .select(col("blk"), col("rid"), col("txt"),
         explode(deletionVariants(

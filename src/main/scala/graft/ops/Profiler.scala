@@ -124,7 +124,7 @@ object Profiler {
     // widenKernelStage: the decimal multiply-accumulate partial agg runs
     // in the scan stage — a sub-128 MB table (sf1.0 lineitem is ONE
     // split) serializes every cross-moment onto one core (r17 A/B)
-    val wide = Dedup.widenKernelStage(df).agg(aggs.head, aggs.tail: _*)
+    val wide = Sizing.widenKernelStage(df).agg(aggs.head, aggs.tail: _*)
     // corr = (n·Σxy − Σx·Σy) / sqrt(n·Σx² − (Σx)²) / sqrt(n·Σy² − (Σy)²)
     // — numerator/denominators computed exactly in decimal, ONE double
     // division at the end (scale factors cancel)

@@ -229,7 +229,7 @@ object Relational {
     // widenKernelStage: exact percentile's partial aggregate buffers
     // EVERY row's value in the scan stage — a one-split table builds the
     // whole buffer set on one core (r17 kernelwidth A/B)
-    Dedup.widenKernelStage(df).groupBy(key)
+    Sizing.widenKernelStage(df).groupBy(key)
       .agg(percentile(value, lit(ps.head)).as(pName(ps.head)),
         ps.tail.map(p => percentile(value, lit(p)).as(pName(p))): _*)
   }

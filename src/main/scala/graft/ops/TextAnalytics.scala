@@ -330,7 +330,7 @@ object TextAnalytics {
   def piiScan(df: DataFrame, id: Column, text: Column): DataFrame =
     // widenKernelStage: the five-regex chain is pure scan-stage CPU —
     // file-split-capped without it (r17 A/B)
-    Dedup.widenKernelStage(df).select(
+    Sizing.widenKernelStage(df).select(
       id.as("doc_id"),
       redactPii(text).as("clean_text"),
       regexp_count(text, lit(UrlRe)).cast("long").as("n_url"),
@@ -373,7 +373,7 @@ object TextAnalytics {
                     minStopRatio: Double = 0.02): DataFrame = {
     // widenKernelStage: the tokenize + stopword membership fold is the
     // scan-stage kernel (r17 A/B; also feeds corpus_curation's filter leg)
-    val base = Dedup.widenKernelStage(df)
+    val base = Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), tokensCol(text).as("toks"))
       .select(col("doc_id"), col("toks"),
         size(col("toks")).cast("long").as("n_tokens"),
@@ -441,7 +441,7 @@ object TextAnalytics {
     // cutSharedKernel: `pairs` feeds the document-frequency aggregate AND
     // the scoring join — one tokenize+explode+partial-agg pass past the
     // size gate (r19 opt)
-    val pairs = Dedup.cutSharedKernel(Dedup.widenKernelStage(df)
+    val pairs = Sizing.cutSharedKernel(Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), explode(tokensCol(text)).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")), src = df)
     val docFreq = pairs
@@ -540,7 +540,7 @@ object TextAnalytics {
     // operator runs at file-split width without it — a sub-128 MB
     // corpus serializes the gram fold onto one core (r16 pathology
     // class; kernelwidth A/B r17: sf1.0 15.4 s → see PROBE.md)
-    Dedup.widenKernelStage(df)
+    Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), toks.as("_toks"))
       .filter(size(col("_toks")) > 0)
       .select(col("doc_id"),
@@ -579,7 +579,7 @@ object TextAnalytics {
     // cutSharedKernel: `occ` feeds both the gram-df aggregate and the
     // per-doc join below — past the size gate the tokenize+explode+
     // partial-agg pipeline runs once instead of twice (r19 opt)
-    val occ = Dedup.cutSharedKernel(Dedup.widenKernelStage(df)
+    val occ = Sizing.cutSharedKernel(Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), tokensCol(text).as("_toks"))
       .filter(size(col("_toks")) > 0)
       .select(col("doc_id"),
@@ -634,8 +634,8 @@ object TextAnalytics {
     // stream — row-identical, since explode(filter(xs,p)) ≡
     // explode(xs).filter(p) and `dl`/stats never depended on the hits.
     // The kernel is widened off the file-split count either way.
-    val doCut = Dedup.sharedKernelCutOk(df)
-    val tokked = Dedup.widenKernelStage(df)
+    val doCut = Sizing.sharedKernelCutOk(df)
+    val tokked = Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), tokensCol(text).as("_toks"))
     val docs =
       if (doCut) Checkpoints.cut(tokked
@@ -715,12 +715,12 @@ object TextAnalytics {
   def unigramLogProb(df: DataFrame, id: Column, text: Column): DataFrame = {
     // widenKernelStage: same scan-stage tokenize kernel as the bigram
     // twin (r17 A/B)
-    val docs = Dedup.widenKernelStage(df)
+    val docs = Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), text.as("text"))
     // cutSharedKernel: docTok feeds the corpus-frequency aggregate AND the
     // per-doc scoring join — one tokenize+explode+partial-agg pass past
     // the size gate (r19 opt)
-    val docTok = Dedup.cutSharedKernel(docs
+    val docTok = Sizing.cutSharedKernel(docs
       .select(col("doc_id"), explode(tokensCol(col("text"))).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("m")), src = df)
     val freq = docTok.groupBy("token").agg(sum(col("m")).as("cnt"))
@@ -756,7 +756,7 @@ object TextAnalytics {
   def bigramLogProb(df: DataFrame, id: Column, text: Column): DataFrame = {
     // widenKernelStage: tokenize + zip_with bigram build + partial agg
     // run in the scan stage — file-split-capped without it (r17 A/B)
-    val docs = Dedup.widenKernelStage(df)
+    val docs = Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), text.as("text"))
     val withToks = docs.select(col("doc_id"), tokensCol(col("text")).as("t"))
     val len = greatest(size(col("t")) - 1, lit(0))
@@ -768,7 +768,7 @@ object TextAnalytics {
     // per-doc scoring join — one tokenize+bigram-build pass past the size
     // gate (r19 opt; the vocabulary count keeps its own pass — unigram
     // vocabulary is not derivable from the bigram multiset)
-    val docBg = Dedup.cutSharedKernel(
+    val docBg = Sizing.cutSharedKernel(
       bg.groupBy("doc_id", "bg").agg(count(lit(1)).as("m")), src = df)
     val c12 = docBg.groupBy("bg").agg(sum(col("m")).as("c12"))
     val c1 = c12.groupBy(split(col("bg"), " ").getItem(0).as("w1"))

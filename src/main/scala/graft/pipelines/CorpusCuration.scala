@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Checkpoints, Dedup, Graph, Relational, Sampling, TextAnalytics}
+import graft.ops.{Checkpoints, Dedup, Graph, Relational, Sampling, Sizing, TextAnalytics}
 
 /** End-to-end training-corpus curation — the capstone composition of the
   * pipeline operators, in the order a production curation runs:
@@ -72,7 +72,7 @@ object CorpusCuration {
     // reading them pinned the minhash stages to 32768 near-empty tasks
     // (165 s on 100k rows, PROBE.md round 13); the corpus scan's own
     // stats are the honest volume signal.
-    val mparts = Dedup.explodedShuffleParts(base, bytesPerRow = 75L)
+    val mparts = Sizing.explodedShuffleParts(base, bytesPerRow = 75L)
     // gateSrc for the same reason as partsHint: s2's carried join-estimate
     // stats must not decide the shared-kernel gate either (r20 — the
     // inflated estimate opened it on a sub-MB corpus, re-adding the eager

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
-import graft.ops.{Dedup, TextAnalytics, VectorOps}
+import graft.ops.{Dedup, Sizing, TextAnalytics, VectorOps}
 
 /** Dedup kernels: native-expression parity with Spark's xxhash64, LSH
   * collision guarantees, and end-to-end pair extraction. */
@@ -143,6 +143,22 @@ class DedupSpec extends SparkSpec {
     }
     assert(staged == single)
     assert(single.nonEmpty)
+  }
+
+  test("pairSpillBudget default never exceeds a third of the spill dir's " +
+    "usable space (no fixed floor over a small or RAM-backed dir)") {
+    // ADVICE r20 #2: an 8 GiB floor planned 8 GiB of spill into any dir
+    // with under 24 GiB usable, tmpfs included. Usable space is read on
+    // both sides of the call, so a neighbour writing to the same disk
+    // cannot flake the bound.
+    val dir = Sizing.spillDir(spark)
+    val before = dir.getUsableSpace
+    val budget = Sizing.pairSpillBudget(spark)
+    val after = dir.getUsableSpace
+    assert(budget >= 0L)
+    assert(budget <= math.max(before, after) / 3,
+      s"default budget $budget B exceeds a third of $dir's usable space " +
+        s"(${math.max(before, after)} B)")
   }
 
   test("minhashIncremental: cross-side pairs only, incl. a doc present on " +
@@ -553,38 +569,24 @@ class DedupSpec extends SparkSpec {
       s"cut() returned without materializing (${acc.value} rows touched)")
   }
 
-  test("jaccardPrefixPairs pinned streams sit behind Checkpoints.cut in " +
-    "measured mode (the default) — RDD-backed leaves, covered by the " +
-    "reliable-checkpoint switch — and pairVolMinBytes=-1 runs cut-free") {
+  test("jaccardPrefixPairs pinned streams sit behind Checkpoints.cut — " +
+    "RDD-backed leaves, covered by the reliable-checkpoint switch") {
     import spark.implicits._
     val df = Seq((1L, "aa bb cc dd ee"), (2L, "aa bb cc dd ee"),
       (3L, "ff gg hh ii jj")).toDF("doc_id", "text")
     def rddLeaves(out: org.apache.spark.sql.DataFrame): Int =
       out.queryExecution.analyzed.collectLeaves()
         .count(_.getClass.getSimpleName == "LogicalRDD")
-    // measured mode (the default: pairVolMinBytes 0): the shingle stream
-    // `s` (read twice by the verify joins) and the prefix-bucket stream
-    // each ride a cut — the post-cut plan's leaves are LogicalRDDs, so
+    // the shingle stream `s` (read twice by the verify joins) and the
+    // prefix-bucket stream each ride a cut — the post-cut plan's leaves
+    // are LogicalRDDs, so
     // spark.graft.checkpoint.dir makes BOTH reliable on a real cluster
     // (r15 verdict #4: a bare localCheckpoint bypassed that switch)
     val out = Dedup.jaccardPrefixPairs(df, col("doc_id"), col("text"))
     assert(rddLeaves(out) >= 3,
       s"expected >= 3 LogicalRDD leaves (s twice + prefix), got " +
         s"${rddLeaves(out)} in:\n${out.queryExecution.analyzed}")
-    val measuredOut = out.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // measuring disabled (-1, budget unpinned): NO cuts and NO eager
-    // measurement jobs — the r20 escape hatch mirroring the minhash
-    // family's gate (r19 verdict #1) — same rows out
-    val conf = spark.conf
-    conf.set("spark.graft.pairVolMinBytes", "-1")
-    val got = try {
-      val lazyOut = Dedup.jaccardPrefixPairs(df, col("doc_id"), col("text"))
-      assert(rddLeaves(lazyOut) == 0,
-        s"measuring disabled must not cut:\n${lazyOut.queryExecution.analyzed}")
-      lazyOut.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    } finally conf.unset("spark.graft.pairVolMinBytes")
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 2L)))
-    assert(measuredOut == got)
   }
 }

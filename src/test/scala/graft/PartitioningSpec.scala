@@ -48,7 +48,7 @@ class PartitioningSpec extends SparkSpec {
   test("exploded-row-aware width: small corpora keep the session default " +
     "and their original plans; a demanding estimate widens the expansion " +
     "shuffles with pinned exchanges") {
-    import graft.ops.Dedup
+    import graft.ops.{Dedup, Sizing}
     import org.apache.spark.sql.SparkSession
     def corpus(s: SparkSession) = {
       import s.implicits._
@@ -63,7 +63,7 @@ class PartitioningSpec extends SparkSpec {
     val default = spark.sessionState.conf.numShufflePartitions
     // small corpus, default target: estimator floors at the session
     // default and the operators' plans carry NO extra pinned exchange
-    assert(Dedup.explodedShuffleParts(corpus(spark)) == default)
+    assert(Sizing.explodedShuffleParts(corpus(spark)) == default)
     val decontPlan = Dedup.decontaminate(corpus(spark), evalSet(spark),
       col("doc_id"), col("text")).queryExecution.executedPlan.toString
     assert(!decontPlan.contains("REPARTITION_BY_NUM"),
@@ -81,7 +81,7 @@ class PartitioningSpec extends SparkSpec {
     // build ever ran suites in parallel (ADVICE r11).
     val widened = spark.newSession()
     widened.conf.set("spark.graft.shuffle.rowsPerPartition", "16")
-    assert(Dedup.explodedShuffleParts(corpus(widened)) > default,
+    assert(Sizing.explodedShuffleParts(corpus(widened)) > default,
       "estimator did not grow under a 16-row/partition target")
     val wideDecon = Dedup.decontaminate(corpus(widened), evalSet(widened),
       col("doc_id"), col("text")).queryExecution.executedPlan.toString

@@ -199,10 +199,10 @@ class ScaleShapeSpec extends SparkSpec {
       // verify-side exchanges (pair stream re-keyed by id_a, then the
       // s-side shuffles) no longer move records — only the pair-dedup
       // exchange, the prefix stages and the Σn² stats job remain.
-      // r20: unchanged — measured mode (cuts + Σn² width job) stays the
-      // DEFAULT for this operator (pairVolMinBytes 0): an sf0.1 A/B read
-      // the cut-free arm ~1 s slower in-suite, so only the minhash
-      // family's eager machinery was gated, not this one.
+      // r20: unchanged — measured mode (cuts + Σn² width job) stays
+      // this operator's only shape: an sf0.1 A/B read a cut-free variant
+      // ~1 s slower in-suite, so only the minhash family's eager
+      // machinery was gated, not this one.
       "jaccard_prefix_pairs" -> 26490L,
       "pq_ann_topk" -> 100L,
       "corpus_curation" -> 2152L,
@@ -246,11 +246,10 @@ class ScaleShapeSpec extends SparkSpec {
     pinnedSession.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
     pinnedSession.conf.set("spark.sql.files.openCostInBytes", "4194304")
     val docs = Tables.documents(pinnedSession, sf).select("doc_id", "text")
-    val parts = graft.ops.Dedup.explodedShuffleParts(docs)
+    val parts = graft.ops.Sizing.explodedShuffleParts(docs)
     val s = docs.select(col("doc_id").cast("long").as("doc_id"),
       graft.ops.Dedup.shingleHashes64(col("text"), 3).as("sh"))
-    val pre = graft.ops.Dedup.jaccardPrefixBuckets(s, 0.7,
-      partsOverride = Some(parts))
+    val pre = graft.ops.Dedup.jaccardPrefixBuckets(s, 0.7, parts)
     // 42,381 = tok-stream repartition + doc-frequency agg + rank-window
     // input for the sf0.01 fixture (measured 2026-08-15; the checkpointed
     // production path runs this exact plan once — the smaller figure vs

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, TextAnalytics}
+import graft.ops.{Dedup, Sizing, TextAnalytics}
 
-/** The shared-kernel checkpoint gate ([[Dedup.cutSharedKernel]]) — the r19
+/** The shared-kernel checkpoint gate ([[Sizing.cutSharedKernel]]) — the r19
   * optimization that shares one tokenize/gram pass between two consumers of
   * the same subframe at scale, while keeping small-corpus plans
   * byte-identical (a localCheckpoint job costs more than re-tokenizing a
@@ -28,7 +28,7 @@ class SharedKernelCutSpec extends SparkSpec {
     val slim = docs.select(col("doc_id"),
       TextAnalytics.tokensCol(col("text")).as("_toks"))
     // a LocalRelation estimates a handful of bytes — far under 64 MiB
-    val out = Dedup.cutSharedKernel(slim, src = docs)
+    val out = Sizing.cutSharedKernel(slim, src = docs)
     assert(!isCut(out), s"tiny corpus must not cut:\n${out.queryExecution}")
   }
 
@@ -38,7 +38,7 @@ class SharedKernelCutSpec extends SparkSpec {
       spark.conf.set("spark.graft.sharedKernelCutBytes", "0")
       val slim = docs.select(col("doc_id"),
         TextAnalytics.tokensCol(col("text")).as("_toks"))
-      val out = Dedup.cutSharedKernel(slim, src = docs)
+      val out = Sizing.cutSharedKernel(slim, src = docs)
       assert(isCut(out), s"forced gate must cut:\n${out.queryExecution}")
     } finally saved.fold(
       spark.conf.unset("spark.graft.sharedKernelCutBytes"))(
@@ -49,7 +49,7 @@ class SharedKernelCutSpec extends SparkSpec {
     val saved = spark.conf.getOption("spark.graft.sharedKernelCutBytes")
     try {
       spark.conf.set("spark.graft.sharedKernelCutBytes", "-1")
-      val out = Dedup.cutSharedKernel(docs.select(col("doc_id")), src = docs)
+      val out = Sizing.cutSharedKernel(docs.select(col("doc_id")), src = docs)
       assert(!isCut(out))
     } finally saved.fold(
       spark.conf.unset("spark.graft.sharedKernelCutBytes"))(

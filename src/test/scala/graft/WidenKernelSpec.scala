@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
+import graft.ops.Sizing
 
-/** Kernel-stage widening policy ([[Dedup.widenKernelStage]]) — the
+/** Kernel-stage widening policy ([[Sizing.widenKernelStage]]) — the
   * scan-width lever behind the r16/r17 text-kernel speedups. Pins the
   * lineage-cut behavior fixed for ADVICE r17: a cut frame's leaf stats
   * carry the ORIGIN byte estimate while its parallelism is the
@@ -41,7 +41,7 @@ class WidenKernelSpec extends SparkSpec {
   test("already-wide lineage-cut input passes through unwidened") {
     val cut = bigDocs.repartition(4).localCheckpoint() // width == session target
     assert(cut.rdd.getNumPartitions == 4)
-    val w = Dedup.widenKernelStage(cut)
+    val w = Sizing.widenKernelStage(cut)
     assert(!hasShuffle(w),
       s"redundant exchange on an already-wide cut:\n${w.queryExecution.executedPlan}")
   }
@@ -49,7 +49,7 @@ class WidenKernelSpec extends SparkSpec {
   test("narrow lineage-cut input above the floor still widens") {
     val cut = bigDocs.coalesce(1).localCheckpoint()
     assert(cut.rdd.getNumPartitions == 1)
-    val w = Dedup.widenKernelStage(cut)
+    val w = Sizing.widenKernelStage(cut)
     assert(hasShuffle(w),
       s"narrow cut frame should widen:\n${w.queryExecution.executedPlan}")
     // proportional sizing: ceil(bytes / 256 KiB) capped at the session
@@ -62,30 +62,19 @@ class WidenKernelSpec extends SparkSpec {
     import spark.implicits._
     val tiny = Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text")
       .coalesce(1).localCheckpoint()
-    assert(!hasShuffle(Dedup.widenKernelStage(tiny)))
+    assert(!hasShuffle(Sizing.widenKernelStage(tiny)))
   }
 
   test("typo'd conf values fail naming the key, not with a bare NumberFormatException") {
-    val saved = spark.conf.getOption("spark.graft.widenKernel.bytesPerTask")
+    val key = Sizing.SharedKernelCutBytesConf
+    val saved = spark.conf.getOption(key)
     try {
-      spark.conf.set("spark.graft.widenKernel.bytesPerTask", "256k")
+      spark.conf.set(key, "64m")
       val e = intercept[IllegalArgumentException] {
-        Dedup.widenKernelStage(bigDocs.coalesce(1).localCheckpoint())
+        Sizing.sharedKernelCutOk(bigDocs)
       }
-      assert(e.getMessage.contains("spark.graft.widenKernel.bytesPerTask"))
-      assert(e.getMessage.contains("256k"))
-
-      val savedW = spark.conf.getOption("spark.graft.widenKernel")
-      try {
-        spark.conf.set("spark.graft.widenKernel", "yes")
-        val e2 = intercept[IllegalArgumentException] {
-          Dedup.widenKernelStage(bigDocs)
-        }
-        assert(e2.getMessage.contains("spark.graft.widenKernel"))
-      } finally savedW.fold(spark.conf.unset("spark.graft.widenKernel"))(
-        spark.conf.set("spark.graft.widenKernel", _))
-    } finally saved.fold(
-      spark.conf.unset("spark.graft.widenKernel.bytesPerTask"))(
-      spark.conf.set("spark.graft.widenKernel.bytesPerTask", _))
+      assert(e.getMessage.contains(key))
+      assert(e.getMessage.contains("64m"))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
