@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: prints `explain("formatted")` for each query (or the
   * names given as args) so pushdown / broadcast / codegen spans can be
@@ -12,17 +11,11 @@ object Explain {
     val (confArgs, nameArgs) = args.drop(1).toSeq.partition(_.startsWith("conf:"))
     val names = if (nameArgs.nonEmpty) nameArgs
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = LocalDirs.configure(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Driver.session("local[4]", width = "4", logLevel = "ERROR")
     confArgs.map(_.stripPrefix("conf:").split("=", 2)).foreach {
       case Array(k, v) => spark.conf.set(k, v)
       case other => sys.error(s"bad conf arg: ${other.mkString("=")}")
     }
-    spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n===================== $name =====================")
       try SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-fixture generator for scale tiers the harness
@@ -168,15 +168,7 @@ object GenData {
       s"names must be 'seq' or 'drawn', got $namesMode")
     val sf = sfArg.toDouble
     val eventsSf = eventsSfArg.toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
 
     val nCustomer = (150000 * sf).toLong.max(1)
     val nSupplier = (10000 * sf).toLong.max(1)

@@ -48,6 +48,31 @@ object SparkEntry {
     (e.union(copies), queries)
   }
 
+  /** The near-dup family's corpus: documents ∪ re-keyed copies, so every
+    * document has at least one true duplicate pair. The 1e8 offset never
+    * collides with a real doc id at any sf (nDocs = 50000·sf). */
+  private def dupCorpus(s: SparkSession, dir: String): DataFrame = {
+    val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    d.union(d.select(col("doc_id") + 100000000L, col("text")))
+  }
+
+  /** The near-dup similarity graph over a dup corpus: minhash pairs
+    * (id_a < id_b, jaccard) as an edge list — unordered, since every
+    * consumer treats it as an intermediate. */
+  private def nearDupEdges(dupped: DataFrame): DataFrame =
+    Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"), ordered = false)
+
+  /** [[nearDupEdges]] symmetrized into the directed (src, dst) edge set the
+    * PageRank twins walk. The pair list is cut first: it feeds BOTH union
+    * branches, and an uncut lineage would run the whole minhash pipeline
+    * twice inside one job. Pairs are distinct with id_a < id_b, so the
+    * reversal union is disjoint — the edge list is already a set. */
+  private def nearDupDigraph(s: SparkSession, dir: String): DataFrame = {
+    val pairs = Checkpoints.cut(nearDupEdges(dupCorpus(s, dir)))
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b"), col("id_a")))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- A1/A2/A3/P1/P6: word count (a1p2a:20) --------------------------
@@ -429,7 +454,7 @@ object SparkEntry {
       // md5 over the vocabulary, not the corpus) and the top-k ranking
       val counts = TextAnalytics.wordCount(docs, col("text"))
         .select(col("word").as("term"), col("cnt"))
-        .localCheckpoint()
+        .transform(Checkpoints.cut)
       val sketch = Sketches.cmBuildWeighted(counts, col("term"), col("cnt"))
       val top = Relational.globalRowNumber(counts,
         Seq(col("cnt").desc, col("term")), alias = "rank")
@@ -1018,55 +1043,29 @@ object SparkEntry {
     // ---- PageRank in exact integer micro-units over the near-dup
     // similarity graph (same edge list dedup_components clusters):
     // importance ∝ how centrally a doc sits in its duplicate cluster -----
-    "doc_pagerank" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      // checkpoint before symmetrizing: the pair list feeds BOTH union
-      // branches, and an uncut lineage would run the whole minhash
-      // pipeline twice inside one job
-      val pairs = Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false) // edge list — pair order is irrelevant
-        .localCheckpoint()
-      val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b"), col("id_a")))
-      // pairs are distinct with id_a < id_b, so the reversal union is
-      // disjoint — the edge list is already a set (edgesDistinct)
-      Graph.pageRank(sym, col("src"), col("dst"), iterations = 5,
-          edgesDistinct = true)
+    "doc_pagerank" -> ((s, dir) =>
+      Graph.pageRank(nearDupDigraph(s, dir), col("src"), col("dst"),
+          iterations = 5, edgesDistinct = true)
         .select(col("node").as("doc_id"), col("r").as("rank_micro"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // ---- seed-set expansion: personalized PageRank over the same graph,
     // teleport restricted to doc_id < 50 — "docs similar to the curated
     // seeds rank high, disconnected regions stay exactly 0" ---------------
-    "doc_pagerank_seeded" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      val pairs = Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false) // edge list — pair order is irrelevant
-        .localCheckpoint()
-      val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b"), col("id_a")))
-      // same disjoint-reversal set argument as doc_pagerank
-      Graph.personalizedPageRank(sym, col("src"), col("dst"),
-          seeds = d.select(col("doc_id")).filter(col("doc_id") < 50),
+    "doc_pagerank_seeded" -> ((s, dir) =>
+      Graph.personalizedPageRank(nearDupDigraph(s, dir), col("src"), col("dst"),
+          seeds = Tables.documents(s, dir).select(col("doc_id"))
+            .filter(col("doc_id") < 50),
           seed = col("doc_id"), iterations = 5, edgesDistinct = true)
         .select(col("node").as("doc_id"), col("r").as("rank_micro"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // ---- exact per-node triangle counts over the same near-dup similarity
     // graph (degree-ordered orientation bounds wedges at O(m^{3/2}); a
     // natural near-dup pair plus its two copies forms a K4 → triangles) ---
-    "triangle_counts" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Graph.triangleCounts(
-        Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false), // intermediate — order irrelevant downstream
-        col("id_a"), col("id_b"))
-    }),
+    "triangle_counts" -> ((s, dir) =>
+      Graph.triangleCounts(nearDupEdges(dupCorpus(s, dir)),
+        col("id_a"), col("id_b"))),
 
     // ---- incremental near-dedup: the per-batch delta-vs-corpus shape —
     // existing = documents, incoming = shifted copies; only cross-side
@@ -1184,11 +1183,8 @@ object SparkEntry {
     // deterministic-recall twin of minhash_dup_pairs (same corpus, same
     // threshold, same brute-force oracle — but candidate pruning is a
     // lemma, not an S-curve) ---------------------------------------------
-    "jaccard_prefix_pairs" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Dedup.jaccardPrefixPairs(dupped, col("doc_id"), col("text"))
-    }),
+    "jaccard_prefix_pairs" -> ((s, dir) =>
+      Dedup.jaccardPrefixPairs(dupCorpus(s, dir), col("doc_id"), col("text"))),
 
     // ---- Markov transition matrix of per-user event-type sequences
     // (bigram counts + exactly-rounded row-normalized probabilities) ------
@@ -1280,42 +1276,27 @@ object SparkEntry {
 
     // ---- MinHash+LSH near-dup (self-union guarantees true dup pairs;
     // hash-green vs the brute-force all-pairs oracle) ----------------------
-    "minhash_dup_pairs" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"))
-    }),
+    "minhash_dup_pairs" -> ((s, dir) =>
+      Dedup.minhashDupPairs(dupCorpus(s, dir), col("doc_id"), col("text"))),
 
     // ---- dedup clusters: similarity pairs → connected components → keep
     // list (min-id representative per cluster; Graph.scala scaladoc).
     // Explicitly the LABEL-PROPAGATION twin, so both algorithms stay under
     // the same recursive-CTE oracle (the production dedupClusters entry
     // point now routes through star contraction — see dedup_components_star)
-    "dedup_components" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Graph.connectedComponents(
-        Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false), // intermediate — order irrelevant downstream
-        col("id_a"), col("id_b"))
+    "dedup_components" -> ((s, dir) =>
+      Graph.connectedComponents(nearDupEdges(dupCorpus(s, dir)), col("id_a"), col("id_b"))
         .select(col("id"), col("comp"), (col("id") === col("comp")).as("keep"))
-        .orderBy("id")
-    }),
+        .orderBy("id")),
 
     // ---- same clustering via large-star/small-star contraction — the
     // O(log² n)-rounds twin for adversarial diameters (label propagation
     // pays one round per hop of the longest chain); identical semantics,
     // so it shares dedup_components' recursive-CTE oracle ----------------
-    "dedup_components_star" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Graph.connectedComponentsStar(
-        Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false), // intermediate — order irrelevant downstream
-        col("id_a"), col("id_b"))
+    "dedup_components_star" -> ((s, dir) =>
+      Graph.connectedComponentsStar(nearDupEdges(dupCorpus(s, dir)), col("id_a"), col("id_b"))
         .select(col("id"), col("comp"), (col("id") === col("comp")).as("keep"))
-        .orderBy("id")
-    }),
+        .orderBy("id")),
 
     // ---- entity resolution: nation-blocked fuzzy name matching —
     // blocking bounds candidates, levenshtein verifies each pair; blocks
@@ -1383,11 +1364,8 @@ object SparkEntry {
     // ---- leakage-safe splits: near-dup clusters land in ONE split (rep-
     // keyed hash); singletons behave like assignSplit on their own id ----
     "cluster_safe_splits" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Sampling.clusterSafeSplits(dupped, col("doc_id"),
-        Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"),
-          ordered = false), // intermediate — order irrelevant downstream
+      val dupped = dupCorpus(s, dir)
+      Sampling.clusterSafeSplits(dupped, col("doc_id"), nearDupEdges(dupped),
         col("id_a"), col("id_b"),
         Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         .orderBy("doc_id")
@@ -1406,20 +1384,14 @@ object SparkEntry {
     }),
 
     // ---- SimHash near-dup ----------------------------------------------
-    "simhash_dup_pairs" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Dedup.simhashDupPairs(dupped, col("doc_id"), col("text"))
-    }),
+    "simhash_dup_pairs" -> ((s, dir) =>
+      Dedup.simhashDupPairs(dupCorpus(s, dir), col("doc_id"), col("text"))),
 
     // Hash-checked twin: same banding/pigeonhole/Hamming pipeline but token
     // bits from md5, which DuckDB can recompute digest-for-digest (the
     // xxhash64 variant above stays rows-only — that kernel is Spark-internal)
-    "simhash_md5_pairs" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
-      Dedup.simhashMd5DupPairs(dupped, col("doc_id"), col("text"))
-    }),
+    "simhash_md5_pairs" -> ((s, dir) =>
+      Dedup.simhashMd5DupPairs(dupCorpus(s, dir), col("doc_id"), col("text"))),
 
     // ---- embedding near-dup via random-hyperplane LSH -------------------
     "embedding_neardup" -> ((s, dir) => {

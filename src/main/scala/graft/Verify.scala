@@ -1,48 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     // SPARK_GRAFT_MASTER lets the multi-executor gate run the SAME dump
     // under local-cluster[n,c,m] — real serialization, network shuffle and
-    // broadcast limits that local[N] never exercises. Executors there are
-    // separate JVMs launched from SPARK_HOME, so the graft classes must
-    // ride along on the executor classpath (this JVM's own classpath
-    // already contains exactly the classes dir + the Spark jars).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = LocalDirs.configure(SparkSession.builder())
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // ABSOLUTE paths only: ExecutorRunner launches executors with
-    // cwd = SPARK_HOME/work/app-*/<n>, so a relative classes dir in the
-    // inherited classpath silently drops the graft classes there — every
-    // driver-serialized lambda then deserializes as a bare
-    // SerializedLambda and fails with ClassCastException on the executor
-    // (caught by this gate's first run, round 19)
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path")
-          .split(java.io.File.pathSeparator)
-          .map(p => new java.io.File(p).getAbsolutePath)
-          .mkString(java.io.File.pathSeparator))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // broadcast limits that local[N] never exercises
+    val spark = Driver.session(master = sys.env.getOrElse(
+      "SPARK_GRAFT_MASTER", s"local[${Driver.cpus}]"))
     new java.io.File(outDir).mkdirs()
-    // pre-generate fixture corpora (content-marker idempotent): the
-    // in-query ensureFixtures calls then no-op
-    graft.sources.BlogCorpus.ensureFixtures(spark, sfDir)
-    graft.sources.ZipImages.ensureFixtures()
-    graft.sources.CsvTables.ensureEventsCsv(spark, sfDir)
-    graft.sources.JsonTables.ensureEventsJsonl(spark, sfDir)
-    graft.sources.OrcTables.ensureEventsOrc(spark, sfDir)
-    graft.sources.PartitionedTables.ensureEventsPartitioned(spark, sfDir)
+    Driver.ensureFixtures(spark, sfDir)
     // local-iteration filter (comma-separated names); driver sets nothing,
     // so the full registry runs in the gate
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")

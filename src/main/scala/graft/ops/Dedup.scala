@@ -178,9 +178,7 @@ object Dedup {
     withSets
       .select(col(aCol), col(bCol), col("_sha"), col("_shb"),
         size(col("_sha")).as("_na"), size(col("_shb")).as("_nb"))
-      .filter(least(col("_na"), col("_nb")).cast("double") >=
-        (col("_na") + col("_nb")).cast("double")
-          * lit(threshold / (1.0 + threshold)) - 1e-9)
+      .filter(lengthOk(col("_na"), col("_nb"), threshold))
       .select(col(aCol), col(bCol),
         size(array_intersect(col("_sha"), col("_shb"))).as("_i"),
         col("_na"), col("_nb"))
@@ -188,6 +186,34 @@ object Dedup {
         (col("_i").cast("double") / (col("_na") + col("_nb") - col("_i")))
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
+
+  /** The exact PPJoin length bound on two set sizes: J ≥ t forces
+    * min(na,nb) ≥ t·(na+nb)/(1+t). The 1e-9 slack only ever KEEPS
+    * candidates, so pair generators apply it before their pair-dedup
+    * exchange (sizes ride in the id struct) without losing a true pair. */
+  private def lengthOk(na: Column, nb: Column, threshold: Double): Column =
+    least(na, nb).cast("double") >=
+      (na + nb).cast("double") * lit(threshold / (1.0 + threshold)) - 1e-9
+
+  /** The verify join every exact-Jaccard pair generator ends in: attach
+    * the `_sha` side to `pairs` on `aCol`, then the `_shb` side on `bCol`,
+    * then [[exactJaccardTail]].
+    *
+    * Shape (r19 opt, the jaccardPrefixPairs sf10 lesson): a sort-merge /
+    * shuffled verify carries the a-side shingle ARRAY on every candidate
+    * row through the b-side exchange — spill scales with candidates ×
+    * array bytes. The signature tables are linear and small, so when
+    * `bcast` (the caller's [[Sizing.verifyBroadcastOk]] answer) holds,
+    * both sides are BroadcastHashJoins and no shuffle ever carries an
+    * array. Otherwise the keyed join runs — correct at any scale, and on
+    * a real cluster its spill is aggregate across executors. */
+  private def verifyJoin(pairs: DataFrame, aSets: DataFrame,
+                         bSets: DataFrame, aCol: String, bCol: String,
+                         bcast: Boolean, threshold: Double): DataFrame = {
+    def side(sets: DataFrame) = if (bcast) broadcast(sets) else sets
+    exactJaccardTail(pairs.join(side(aSets), aCol).join(side(bSets), bCol),
+      aCol, bCol, threshold)
+  }
 
   /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
     *
@@ -259,40 +285,21 @@ object Dedup {
         posexplode(minhashBandBuckets(col("sh"), k, rowsPerBand))
           .as(Seq("band", "bucket")))
       .select(col("did"), col("band"), col("bucket"))
-    val tf = jaccardThreshold / (1.0 + jaccardThreshold)
-    val lengthFilter = (a: Column, b: Column) =>
-      least(a("nsh"), b("nsh")).cast("double") >=
-        (a("nsh") + b("nsh")).cast("double") * lit(tf) - 1e-9
     // banded stream ≈ one row per (k/rowsPerBand ≈ 16) per doc — about one
     // row per ~75 input bytes; width floors at the session default and
     // grows with the corpus (same posture as the gram-stream operators)
     val pairs = bucketPairs(banded, col("did"), maxBucket,
         pinnedParts = Some(partsHint.getOrElse(
           Sizing.explodedShuffleParts(df, bytesPerRow = 75L))),
-        pairFilter = Some(lengthFilter))
+        pairFilter = Some((a, b) => lengthOk(a("nsh"), b("nsh"),
+          jaccardThreshold)))
       .select(col("id_a.doc_id").as("id_a"), col("id_b.doc_id").as("id_b"))
-    // Verify join shape (r19 opt, the jaccardPrefixPairs sf10 lesson): a
-    // sort-merge/shuffled verify carries the id_a-side shingle ARRAY on
-    // every candidate row through the id_b exchange — spill scales with
-    // candidates × array bytes. The signature table is linear and small,
-    // so broadcast it (gated by Sizing.VerifyBroadcastBytesConf, default
-    // 2 GiB; <=0 or oversized keeps the keyed-join shape, whose spill is
-    // aggregate across executors on a real cluster).
-    val withSets =
-      if (Sizing.verifyBroadcastOk(base, exact = doCut,
-          srcBytes = Sizing.leafPlanBytes(gateDf)))
-        pairs
-          .join(broadcast(base.select(col("doc_id").as("id_a"),
-            col("sh").as("_sha"))), "id_a")
-          .join(broadcast(base.select(col("doc_id").as("id_b"),
-            col("sh").as("_shb"))), "id_b")
-      else
-        pairs
-          .join(base.select(col("doc_id").as("id_a"), col("sh").as("_sha")),
-            "id_a")
-          .join(base.select(col("doc_id").as("id_b"), col("sh").as("_shb")),
-            "id_b")
-    val verified = exactJaccardTail(withSets, "id_a", "id_b",
+    val verified = verifyJoin(pairs,
+      base.select(col("doc_id").as("id_a"), col("sh").as("_sha")),
+      base.select(col("doc_id").as("id_b"), col("sh").as("_shb")),
+      "id_a", "id_b",
+      Sizing.verifyBroadcastOk(base, exact = doCut,
+        srcBytes = Sizing.leafPlanBytes(gateDf)),
       jaccardThreshold)
     if (ordered) verified.orderBy("id_a", "id_b") else verified
   }
@@ -379,26 +386,12 @@ object Dedup {
       .head.getLong(0)
     val pairParts = math.max(parts,
       math.min(32768L, pairVol / target + 1).toInt)
-    val tf = threshold / (1.0 + threshold)
-    val lengthFilter = (a: Column, b: Column) =>
-      least(a("nsh"), b("nsh")).cast("double") >=
-        (a("nsh") + b("nsh")).cast("double") * lit(tf) - 1e-9
-    // The verify must attach BOTH shingle arrays to every surviving
-    // candidate. Shape matters enormously here: a sort-merge join carries
-    // the id_a-side ARRAY on every pair row through the id_b exchange, so
-    // its transient sort spill is (candidate pairs × array bytes) — the
-    // quadratic times ~450 B at sf10, which is what actually filled the
-    // disk on the saturated vocabulary (the 96 B/candidate projection
-    // below only ever covered the skinny dedup exchange). The signature
-    // table itself is LINEAR and small (count × (24 + 8·avg|sh|): ~500 MB
-    // for the 1M-doc dup'd sf10 corpus), so the Spark-first verify is two
-    // BroadcastHashJoins against it — the quadratic stream stays map-side
-    // after its dedup exchange and no shuffle ever carries an array.
-    // Sizing.VerifyBroadcastBytesConf (default 2 GiB; <=0 disables)
-    // gates the hint: beyond it (true corpus scale, where the signature
-    // table outgrows executor memory) the sort-merge shape below is kept —
-    // on a real cluster its spill is aggregate across executors, and the
-    // staged passes bound it per wave.
+    // verify shape ([[verifyJoin]]): at sf10 a sort-merge verify's spill
+    // is the quadratic candidate count × ~450 B of shingle array (what
+    // filled the disk on the saturated vocabulary), while the signature
+    // table stays linear (~500 MB for the 1M-doc dup'd corpus) — so it is
+    // broadcast whenever it fits; past the budget the keyed shape runs and
+    // the staged passes below bound its spill per wave
     val useBcast = Sizing.verifyBroadcastOk(s, exact = true,
       srcBytes = Sizing.leafPlanBytes(docs))
     // pin the expansion stages (pair generation, exact-Jaccard verify):
@@ -407,23 +400,13 @@ object Dedup {
     def verified(bkts: DataFrame, w: Int): DataFrame = {
       val pairs = bucketPairs(bkts, col("did"), maxBucket,
           pinnedParts = Some(w),
-          pairFilter = Some(lengthFilter))
+          pairFilter = Some((a, b) => lengthOk(a("nsh"), b("nsh"), threshold)))
         .select(col("id_a.doc_id").as("id_a"), col("id_b.doc_id").as("id_b"))
-      val withSets =
-        if (useBcast)
-          pairs
-            .join(broadcast(s.select(col("doc_id").as("id_a"),
-              col("sh").as("_sha"))), "id_a")
-            .join(broadcast(s.select(col("doc_id").as("id_b"),
-              col("sh").as("_shb"))), "id_b")
-        else
-          pairs
-            .repartition(w, col("id_a"))
-            .join(s.select(col("doc_id").as("id_a"), col("sh").as("_sha")),
-              "id_a")
-            .join(s.select(col("doc_id").as("id_b"), col("sh").as("_shb")),
-              "id_b")
-      exactJaccardTail(withSets, "id_a", "id_b", threshold)
+      // the keyed shape pins its first join's width like the stages above
+      verifyJoin(if (useBcast) pairs else pairs.repartition(w, col("id_a")),
+        s.select(col("doc_id").as("id_a"), col("sh").as("_sha")),
+        s.select(col("doc_id").as("id_b"), col("sh").as("_shb")),
+        "id_a", "id_b", useBcast, threshold)
     }
     // ---- disk-budget staging (r19: the first FULL sf10 pass found it) --
     // On the 31-token fixture at 1M docs the measured candidate volume is
@@ -568,15 +551,12 @@ object Dedup {
         posexplode(minhashBandBuckets(col("sh"), k, rowsPerBand))
           .as(Seq("band", "bucket")))
       .select(col("sid"), col("band"), col("bucket"))
-    val tf = jaccardThreshold / (1.0 + jaccardThreshold)
-    val lengthFilter = (a: Column, b: Column) =>
-      least(a("nsh"), b("nsh")).cast("double") >=
-        (a("nsh") + b("nsh")).cast("double") * lit(tf) - 1e-9
     val pairs = bucketPairs(banded, col("sid"), maxBucket,
         pinnedParts = Some(
           Sizing.explodedShuffleParts(existing, bytesPerRow = 75L)
             .max(Sizing.explodedShuffleParts(incoming, bytesPerRow = 75L))),
-        pairFilter = Some(lengthFilter))
+        pairFilter = Some((a, b) => lengthOk(a("nsh"), b("nsh"),
+          jaccardThreshold)))
       .filter(col("id_a.side") === 0 && col("id_b.side") === 1)
       .select(col("id_a.doc_id").as("existing_id"),
         col("id_b.doc_id").as("incoming_id"))
@@ -584,17 +564,10 @@ object Dedup {
       .select(col("doc_id").as("existing_id"), col("sh").as("_sha"))
     val inB = base.filter(col("side") === 1)
       .select(col("doc_id").as("incoming_id"), col("sh").as("_shb"))
-    // broadcast-gated verify — no shuffle may carry a shingle array
-    // (minhashDupPairs' sf10 rationale; same conf gate)
-    val withSets =
-      if (Sizing.verifyBroadcastOk(base, exact = doCut,
+    verifyJoin(pairs, exA, inB, "existing_id", "incoming_id",
+        Sizing.verifyBroadcastOk(base, exact = doCut,
           srcBytes = Sizing.leafPlanBytes(existing) +
-            Sizing.leafPlanBytes(incoming)))
-        pairs.join(broadcast(exA), "existing_id")
-          .join(broadcast(inB), "incoming_id")
-      else
-        pairs.join(exA, "existing_id").join(inB, "incoming_id")
-    exactJaccardTail(withSets, "existing_id", "incoming_id",
+            Sizing.leafPlanBytes(incoming)),
         jaccardThreshold)
       .orderBy("existing_id", "incoming_id")
   }

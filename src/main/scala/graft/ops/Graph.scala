@@ -251,27 +251,64 @@ object Graph {
     * mass (nodes with no outbound edge) and flooring remainders are
     * dropped, not redistributed — a documented, deterministic variant.
     *
-    * Scale shape: each iteration is one equi-join of the rank table
-    * against the (cached) augmented edge list plus one partial-aggregated
-    * groupBy — linear shuffles on the edge count, no driver-side graph
-    * state. Self-loops with weight 0 keep inbound-less nodes in the
-    * iteration without a second recursive reference (the same trick lets
-    * the DuckDB recursive-CTE oracle express it with one `pr` reference).
+    * This is [[personalizedPageRank]] with EVERY node a seed (teleport
+    * base 150000 and r₀ = 1e6 everywhere), so both run the one
+    * [[rankLoop]]; the all-seed flag is a literal, not a seed join.
     *
-    * Lineage: unlike [[connectedComponents]] (whose convergence check
-    * reads each round's labels TWICE, doubling the plan per round), each
-    * PageRank round references the previous ranks exactly once — the plan
-    * grows linearly, so iterations stay LAZY and fuse into one job.
-    * An eager localCheckpoint every `checkpointInterval` rounds bounds
-    * plan depth for long runs without paying one materialization job per
-    * round. */
-  /** `edgesDistinct = true` — caller guarantees the edge list is already a
+    * `edgesDistinct = true` — caller guarantees the edge list is already a
     * set (e.g. ordered similarity pairs plus their disjoint reversals):
     * skips the full-edge-list dedup shuffle. Semantics are unchanged only
     * under that guarantee (PageRank is defined over the edge SET). */
   def pageRank(edges: DataFrame, src: Column, dst: Column,
                iterations: Int = 5, checkpointInterval: Int = 10,
-               edgesDistinct: Boolean = false): DataFrame = {
+               edgesDistinct: Boolean = false): DataFrame =
+    rankLoop(edges, src, dst, None, iterations, checkpointInterval,
+      edgesDistinct)
+
+  /** Personalized PageRank in the same EXACT integer micro-units as
+    * [[pageRank]], with teleport restricted to a SEED set — the
+    * "expand a curated seed corpus through the similarity/link graph"
+    * primitive of a training-data pipeline: scores measure graph
+    * proximity to the seeds (docs similar to known-good docs rank high,
+    * disconnected regions stay at exactly 0), and the keep-list is one
+    * filter on the output.
+    *
+    * Semantics per iteration (all integral, remainders dropped as in
+    * [[pageRank]]):
+    *   r'(n) = (n ∈ S ? 150000 : 0) + (85 · Σ_{(s→n)} (r(s) div deg(s))) div 100
+    * from r₀ = 1_000_000 on seeds, 0 elsewhere. Seed ids not present in
+    * the edge list are ignored (the graph defines the node set). */
+  def personalizedPageRank(edges: DataFrame, src: Column, dst: Column,
+                           seeds: DataFrame, seed: Column,
+                           iterations: Int = 5,
+                           checkpointInterval: Int = 10,
+                           edgesDistinct: Boolean = false): DataFrame =
+    rankLoop(edges, src, dst, Some(seeds.select(seed.cast("long").as("node"))),
+      iterations, checkpointInterval, edgesDistinct)
+
+  /** The one integer PageRank iteration behind [[pageRank]] and
+    * [[personalizedPageRank]]; `seeds` = None flags every node.
+    *
+    * Scale shape: each iteration is one equi-join of the rank table
+    * against the (cached) augmented edge list plus one partial-aggregated
+    * groupBy — linear shuffles on the edge count, no driver-side graph
+    * state. Self-loops with weight 0 keep inbound-less nodes in the
+    * iteration without a second recursive reference (the same trick lets
+    * the DuckDB recursive-CTE oracle express it with one `pr` reference),
+    * and the teleport base rides those self-loop rows (one per node), so
+    * no per-round seed join is added — `sum(base)` inside the existing
+    * aggregate recovers it.
+    *
+    * Lineage: unlike [[connectedComponents]] (whose convergence check
+    * reads each round's labels TWICE, doubling the plan per round), each
+    * round references the previous ranks exactly once — the plan grows
+    * linearly, so iterations stay LAZY and fuse into one job. An eager
+    * cut every `checkpointInterval` rounds bounds plan depth for long
+    * runs without paying one materialization job per round. */
+  private def rankLoop(edges: DataFrame, src: Column, dst: Column,
+                       seeds: Option[DataFrame], iterations: Int,
+                       checkpointInterval: Int,
+                       edgesDistinct: Boolean): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
     require(checkpointInterval > 0,
       s"checkpointInterval must be positive, got $checkpointInterval")
@@ -295,101 +332,38 @@ object Graph {
     e.count()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
+    // seed flag resolved ONCE against the node set (seeds are small —
+    // broadcast); it then rides the cached self-loop rows below
+    val flagged = seeds match {
+      case Some(sd) => nodes
+        .join(broadcast(sd.distinct().withColumn("_s", lit(1L))),
+          Seq("node"), "left")
+        .select(col("node"), coalesce(col("_s"), lit(0L)).as("is_seed"))
+      case None => nodes.select(col("node"), lit(1L).as("is_seed"))
+    }
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("d"))
     // augmented edges: real edges carry the source's outdegree; every node
-    // additionally gets a weight-0 self edge so nodes without inbound
-    // edges still receive their base rank each round
+    // additionally gets a weight-0 self edge carrying its teleport base,
+    // so nodes without inbound edges still receive it each round
     // pre-partitioned on src BEFORE caching: the per-iteration join key is
     // src = node, and each iteration's rank table arrives hash-partitioned
     // on node from the previous groupBy — so a co-partitioned cached edge
     // list makes every join exchange-free on both sides (only the groupBy
     // shuffle remains per round)
     val aug = e.join(outdeg, "src")
-      .select(col("src"), col("dst"), col("d"))
-      .union(nodes.select(col("node"), col("node"),
-        lit(null).cast("long")))
-      .repartition(col("src"))
-      .persist()
-    aug.count() // materialize once; every iteration re-reads it
-    // initial ranks from aug's OWN self-loop rows (r19 opt): the cached
-    // augmented table already carries one (node, node, null) row per node,
-    // so r₀ needs no second node-set distinct and no extra checkpoint job —
-    // its lineage is one filter over the materialized cache, and it arrives
-    // already hash-partitioned on the join key (the repartition above), so
-    // round 1's join is exchange-free on both sides like every later round
-    var ranks = aug.filter(col("d").isNull)
-      .select(col("src").as("node"), lit(1000000L).as("r"))
-    for (i <- 1 to iterations) {
-      ranks = aug.join(ranks, aug("src") === ranks("node"))
-        .select(aug("dst").as("to"),
-          when(col("d").isNotNull, expr("r div d"))
-            .otherwise(lit(0L)).as("c"))
-        .groupBy(col("to").as("node"))
-        .agg(expr("CAST(150000 + (85 * sum(c)) div 100 AS BIGINT)").as("r"))
-      if (i % checkpointInterval == 0 && i < iterations)
-        ranks = Checkpoints.cut(ranks)
-    }
-    // materialize BEFORE unpersisting: the loop is lazy, so dropping the
-    // cached edge list first would force every iteration to rebuild it
-    val out = Checkpoints.cut(ranks)
-    e.unpersist(blocking = false)
-    aug.unpersist(blocking = false)
-    out
-  }
-
-  /** Personalized PageRank in the same EXACT integer micro-units as
-    * [[pageRank]], with teleport restricted to a SEED set — the
-    * "expand a curated seed corpus through the similarity/link graph"
-    * primitive of a training-data pipeline: scores measure graph
-    * proximity to the seeds (docs similar to known-good docs rank high,
-    * disconnected regions stay at exactly 0), and the keep-list is one
-    * filter on the output.
-    *
-    * Semantics per iteration (all integral, remainders dropped as in
-    * [[pageRank]]):
-    *   r'(n) = (n ∈ S ? 150000 : 0) + (85 · Σ_{(s→n)} (r(s) div deg(s))) div 100
-    * from r₀ = 1_000_000 on seeds, 0 elsewhere. Seed ids not present in
-    * the edge list are ignored (the graph defines the node set).
-    *
-    * Plan shape is [[pageRank]]'s: co-partitioned cached augmented
-    * edges, one equi-join + one partial-aggregated groupBy per round,
-    * lazy rounds fused into one job. The seed base rides the weight-0
-    * self-loop rows (one per node), so no per-round broadcast join is
-    * added — `sum(base)` inside the existing aggregate recovers it. */
-  def personalizedPageRank(edges: DataFrame, src: Column, dst: Column,
-                           seeds: DataFrame, seed: Column,
-                           iterations: Int = 5,
-                           checkpointInterval: Int = 10,
-                           edgesDistinct: Boolean = false): DataFrame = {
-    require(iterations > 0, s"iterations must be positive, got $iterations")
-    require(checkpointInterval > 0,
-      s"checkpointInterval must be positive, got $checkpointInterval")
-    val e0 = edges
-      .select(src.cast("long").as("src"), dst.cast("long").as("dst"))
-    // re-key on src before caching — same rationale as pageRank (r20)
-    val e = (if (edgesDistinct) e0 else e0.distinct())
-      .repartition(col("src")).persist()
-    e.count()
-    val sd = seeds.select(seed.cast("long").as("node")).distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct()
-    // seed flag resolved ONCE against the node set (seeds are small —
-    // broadcast); it then rides the cached self-loop rows below
-    val flagged = nodes
-      .join(broadcast(sd.withColumn("_s", lit(1L))), Seq("node"), "left")
-      .select(col("node"), coalesce(col("_s"), lit(0L)).as("is_seed"))
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("d"))
-    val aug = e.join(outdeg, "src")
       .select(col("src"), col("dst"), col("d"), lit(0L).as("base"))
       .union(flagged.select(col("node"), col("node"),
         lit(null).cast("long"), (col("is_seed") * 150000L).as("base")))
       .repartition(col("src"))
       .persist()
-    aug.count()
-    // initial ranks from aug's self-loop rows (see pageRank): the seed flag
-    // rides the cached `base` column, so r₀ = 1e6 exactly on seeds — no
-    // second node-set pass, no extra checkpoint job, co-partitioned with
-    // the round-1 join
+    aug.count() // materialize once; every iteration re-reads it
+    // initial ranks from aug's OWN self-loop rows (r19 opt): the cached
+    // augmented table already carries one (node, node, null, base) row per
+    // node, so r₀ = 1e6 exactly on seeds needs no second node-set pass and
+    // no extra checkpoint job — its lineage is one filter over the
+    // materialized cache, and it arrives already hash-partitioned on the
+    // join key (the repartition above), so round 1's join is exchange-free
+    // on both sides like every later round
     var ranks = aug.filter(col("d").isNull)
       .select(col("src").as("node"),
         when(col("base") > 0, lit(1000000L)).otherwise(lit(0L)).as("r"))
@@ -405,6 +379,8 @@ object Graph {
       if (i % checkpointInterval == 0 && i < iterations)
         ranks = Checkpoints.cut(ranks)
     }
+    // materialize BEFORE unpersisting: the loop is lazy, so dropping the
+    // cached edge list first would force every iteration to rebuild it
     val out = Checkpoints.cut(ranks)
     e.unpersist(blocking = false)
     aug.unpersist(blocking = false)

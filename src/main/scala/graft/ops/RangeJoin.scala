@@ -172,7 +172,7 @@ object RangeJoin {
     val cum = dense.withColumn("ic", sum(col("c")).over(intraW))
       .join(broadcast(supPre), "sup")
       .select(col("bin"), (col("ic") + col("pc")).as("p"))
-      .localCheckpoint() // referenced by two lookup joins — compute once
+      .transform(Checkpoints.cut) // referenced by two lookup joins — compute once
     // the prefix table is nBins ≈ |R|/32 rows of 16 bytes; broadcast the
     // lookups while that stays comfortably in-memory
     val cumJ = if (nBins <= (1L << 22)) broadcast(cum) else cum

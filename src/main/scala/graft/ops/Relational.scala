@@ -595,7 +595,7 @@ object Relational {
         .withColumn("_pid", spark_partition_id())) {
         case (acc, ((v, _), i)) => acc.withColumn(s"_v$i", v)
       }
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val totals = parted.groupBy("_pid")
       .agg(sum(col("_v0")).as("_s0"),
         (1 until n).map(i => sum(col(s"_v$i")).as(s"_s$i")): _*)
@@ -631,7 +631,7 @@ object Relational {
     val spark = df.sparkSession
     val parted = df.repartitionByRange(order: _*)
       .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(Checkpoints.cut)
     val counts = parted.groupBy("_pid").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     var acc = 0L

@@ -264,10 +264,12 @@ object Sizing {
     * kernel eagerly on every family call and was half of verdict #1's
     * in-suite regression. Bound the table from the source leaf bytes
     * instead: ≤1 shingle hash (8 B) per ~2 raw text bytes plus the 24 B
-    * row struct, and parquet leaf stats under-report raw text by the
-    * compression ratio (≤4× on these corpora), so 8 × leaf bytes is a
-    * safe ceiling — a gate-closed (<64 MiB) corpus bounds at 512 MiB,
-    * always inside the 2 GiB default budget. Unknown stats (0) refuse the
+    * row struct, times the parquet compression ratio the leaf stats hide.
+    * Duplicated text — the very input a dedup operator exists for —
+    * dictionary-encodes far past the 4× of ordinary corpora (ADVICE r20
+    * #1), so the ceiling is 32 × leaf bytes: a gate-closed (<64 MiB)
+    * corpus still bounds inside the 2 GiB default budget, and anything
+    * nearer the limit takes the keyed join. Unknown stats (0) refuse the
     * broadcast: the keyed-join shape is correct at any scale. */
   private[graft] def verifyBroadcastOk(s: DataFrame, exact: Boolean,
                                        srcBytes: => BigInt): Boolean = {
@@ -279,7 +281,7 @@ object Sizing {
       r.getLong(0) * 24L + r.getLong(1) * 8L <= limit
     } else {
       val b = srcBytes
-      b > 0 && b * 8 <= BigInt(limit)
+      b > 0 && b * 32 <= BigInt(limit)
     }
   }
 

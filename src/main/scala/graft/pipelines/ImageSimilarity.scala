@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{ImageOps, Lsh, Projections, VectorOps}
+import graft.ops.{Checkpoints, ImageOps, Lsh, Projections, VectorOps}
 import graft.sources.ZipImages
 
 /** The reference's flagship end-to-end DAG (SURVEY.md §3.3;
@@ -74,12 +74,12 @@ object ImageSimilarity {
         .select(col("query_id"), col("candidate_id"),
           round(VectorOps.euclidean(col("qv"), col("cv")), 6).as("dist_r"))
         .orderBy(col("query_id"), col("dist_r"), col("candidate_id"))
-      // The distance set is ≤ |queries|·30 rows — eagerly local-checkpoint
+      // The distance set is ≤ |queries|·30 rows — eagerly checkpoint
       // it while `feats` is still cached, then release the cache. The
       // result stays a genuine distributed DataFrame (no driver collect /
       // re-parallelize round-trip) whose lineage is cut, so later actions
       // cannot recompute the whole DAG against the unpersisted stage.
-      result.localCheckpoint(true)
+      Checkpoints.cut(result)
     } finally feats.unpersist(blocking = false)
   }
 }

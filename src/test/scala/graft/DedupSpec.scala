@@ -121,6 +121,40 @@ class DedupSpec extends SparkSpec {
     assert(bcast.nonEmpty)
   }
 
+  test("minhashDupPairs: a verify-broadcast budget under 32× the leaf " +
+    "bytes takes the keyed join — duplicated text compresses far past 4×") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    val d = (0L until 60L).map(i =>
+        (i, Seq.fill(30)(s"w${rng.nextInt(200)}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val dupped = d.union(d.select(col("doc_id") + 100000000L, col("text")))
+    val leaf = Sizing.leafPlanBytes(dupped)
+    assert(leaf > 0)
+    assert(!Sizing.sharedKernelCutOk(dupped), "corpus must take the " +
+      "sub-gate (leaf-estimate) broadcast check")
+    // verify joins carrying a broadcast hint on their signature side
+    def run(): (Int, Set[(Long, Long, Double)]) = {
+      val pairs = Dedup.minhashDupPairs(dupped, col("doc_id"), col("text"))
+      val hinted = pairs.queryExecution.optimizedPlan.collect {
+        case j: Join if j.hint.rightHint.exists(_.strategy.contains(BROADCAST)) => j
+      }.size
+      (hinted, pairs.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    }
+    val (bcastJoins, bcast) = run() // default 2 GiB: broadcast verify
+    assert(bcastJoins == 2)
+    // between the old 8× bound and the 32× one
+    spark.conf.set(Sizing.VerifyBroadcastBytesConf, (leaf * 16).toString)
+    val (keyedJoins, keyed) = try run()
+      finally spark.conf.unset(Sizing.VerifyBroadcastBytesConf)
+    assert(keyedJoins == 0, "a budget under 32× the leaf bytes must keep " +
+      "the keyed verify join")
+    assert(keyed == bcast)
+    assert(bcast.nonEmpty)
+  }
+
   test("jaccardPrefixPairs: live-disk sub-split (forced via the usable " +
     "override) is row-identical — a pass that would out-spill the disk " +
     "splits itself on a salted second hash, disjoint within the pass") {

@@ -110,6 +110,26 @@ class GraphSpec extends SparkSpec {
     assert(out == Map(1L -> 1217281L, 2L -> 1054187L, 3L -> 728531L))
   }
 
+  test("property: pageRank equals personalizedPageRank seeded with every " +
+    "node, duplicate edges and self-loops included") {
+    import org.scalacheck.{Gen, Prop}
+    import spark.implicits._
+    // the all-seed literal flag against the broadcast seed-join path;
+    // checkpointInterval = 2 < iterations also runs an interior cut
+    val pairGen = Gen.zip(Gen.choose(0L, 12L), Gen.choose(0L, 12L))
+    val graphGen = Gen.choose(1, 25).flatMap(n => Gen.listOfN(n, pairGen))
+    checkProp(Prop.forAll(graphGen) { pairs =>
+      val e = edges(pairs)
+      val every = pairs.flatMap { case (a, b) => Seq(a, b) }.toDF("id")
+      def ranks(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      ranks(Graph.pageRank(e, col("a"), col("b"), iterations = 3,
+          checkpointInterval = 2)) ==
+        ranks(Graph.personalizedPageRank(e, col("a"), col("b"), every,
+          col("id"), iterations = 3, checkpointInterval = 2))
+    }, minTests = 6)
+  }
+
   test("triangleCounts: K4 plus a pendant edge — hand-counted") {
     // K4 on {1,2,3,4}: 4 triangles, every node in exactly 3; the pendant
     // edge (10,11) contributes zero but both nodes must still be emitted
@@ -148,20 +168,48 @@ class GraphSpec extends SparkSpec {
 
   test("components run with RELIABLE checkpoints when " +
     "spark.graft.checkpoint.dir is set") {
+    // so do the range-ranked Relational operators and countWithin's
+    // prefix table: every cut under src/main goes through Checkpoints.cut
+    import graft.ops.{Checkpoints, RangeJoin, Relational}
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.conf.set(graft.ops.Checkpoints.DirConf, dir.toString)
+    spark.conf.set(Checkpoints.DirConf, dir.toString)
+    // a session keeps its first resolved checkpoint dir: count files under
+    // the one in force, not under `dir`
+    def ckptFiles(): Long = spark.sparkContext.getCheckpointDir.fold(0L) { d =>
+      val stream = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(new java.net.URI(d)))
+      try stream.filter(java.nio.file.Files.isRegularFile(_)).count()
+      finally stream.close()
+    }
+    def landed[T](what: String)(body: => T): T = {
+      val before = ckptFiles()
+      val out = body
+      assert(ckptFiles() > before, s"$what wrote no reliable checkpoint files")
+      out
+    }
     try {
       val e = edges(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
-      val out = Graph.connectedComponents(e, col("a"), col("b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val out = landed("connectedComponents") {
+        Graph.connectedComponents(e, col("a"), col("b"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      // checkpoint data actually landed under the configured directory
-      val stream = java.nio.file.Files.walk(dir)
-      val nFiles =
-        try stream.filter(java.nio.file.Files.isRegularFile(_)).count()
-        finally stream.close()
-      assert(nFiles > 0, s"no reliable checkpoint files under $dir")
-    } finally spark.conf.unset(graft.ops.Checkpoints.DirConf)
+      val ranked = landed("globalRowNumber") {
+        Relational.globalRowNumber(e, Seq(col("a"), col("b")))
+          .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+      }
+      assert(ranked == Map(1L -> 1L, 2L -> 2L, 10L -> 3L))
+      // pinned sub-bins reach the prefix-sum path (the cut lookup table)
+      val ts = spark.range(40).select(col("id"), (col("id") * 3L).as("ts"))
+      val counts = landed("countWithin") {
+        RangeJoin.countWithin(ts, ts, col("id"), col("ts"), col("id"),
+            col("ts"), windowS = 6L, subBinS = 2L)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      // ts = 3·id: within ±6 s are the ids ±1 and ±2, minus the row itself
+      assert(counts == (0L until 40L).map(i =>
+        i -> ((i - 2L).max(0L) to (i + 2L).min(39L)).count(_ != i).toLong).toMap)
+    } finally spark.conf.unset(Checkpoints.DirConf)
   }
 
   test("star contraction: 100-node path converges in O(log² n) rounds " +
