@@ -247,7 +247,7 @@ object Bench {
     // absorb JIT + classloading cost (standard benchmarking hygiene; every
     // per-query number then measures the query, not the VM)
     spark.range(2000000L).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
+    Tables.lineitem(spark, sfDir).limit(1000)
       .groupBy("l_returnflag").count().collect()
     // fixtures are generated once before the timed loop.
     // SPARK_GRAFT_BENCH_NO_FIXTURES=1 skips them for targeted runs whose

@@ -1,6 +1,10 @@
 package graft
 
 import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
+
+import scala.jdk.OptionConverters._
+import scala.util.Try
 
 /** Shuffle/spill local-dir selection for the driver mains (guide §6 —
   * file layout; §2.1 — local disk bandwidth for shuffle files can be the
@@ -28,8 +32,9 @@ import java.io.File
   *
   * Each JVM gets its own `pid-<pid>` subdirectory so a killed JVM's
   * leftovers (Spark's shutdown hook never ran) are identifiable: on
-  * startup, sibling dirs whose pid is dead are purged — tmpfs leaks are
-  * RAM leaks.
+  * startup, sibling dirs whose JVM is gone are purged — tmpfs leaks are
+  * RAM leaks. A pid alone does not name a JVM once the OS recycles it, so
+  * each dir also holds a marker with its JVM's start instant.
   */
 object LocalDirs {
 
@@ -38,6 +43,29 @@ object LocalDirs {
     fs.foreach(deleteRecursively)
     f.delete(): Unit
   }
+
+  /** Marker file in each `pid-<n>` dir: the owning JVM's start instant. */
+  private val StartMarker = ".start"
+
+  private def startInstant(p: ProcessHandle): Option[String] =
+    p.info().startInstant().toScala.map(_.toString)
+
+  /** Delete every `pid-<n>` dir under `root` whose JVM is gone: the pid is
+    * dead, or it is alive but started at another instant than the dir's
+    * marker records (the OS recycled the pid). A dir without a marker, or
+    * a live process whose start instant the OS does not report, is kept:
+    * its owner may still be writing the marker. */
+  def purgeStale(root: File): Unit =
+    for (d <- Option(root.listFiles()).getOrElse(Array.empty[File])) {
+      val pid = d.getName.stripPrefix("pid-")
+      if (d.getName.startsWith("pid-") && pid.nonEmpty && pid.forall(_.isDigit)) {
+        val live = pid.toLongOption.flatMap(n => ProcessHandle.of(n).toScala.filter(_.isAlive))
+        // an unreadable marker counts as none (a concurrent purge may be deleting it)
+        val recorded = Try(Files.readString(new File(d, StartMarker).toPath).trim).toOption
+        val recycled = live.exists(h => recorded.exists(r => startInstant(h).exists(_ != r)))
+        if (live.isEmpty || recycled) deleteRecursively(d)
+      }
+    }
 
   /** The local-dir override for a SparkSession builder, or None to keep
     * Spark's default resolution. */
@@ -51,14 +79,17 @@ object LocalDirs {
       else {
         val root = new File(shm, "graft-spark-local")
         root.mkdirs()
-        for (d <- Option(root.listFiles()).getOrElse(Array.empty[File])) {
-          val pid = d.getName.stripPrefix("pid-")
-          if (d.getName.startsWith("pid-") && pid.nonEmpty &&
-              pid.forall(_.isDigit) && !new File(s"/proc/$pid").exists())
-            deleteRecursively(d)
-        }
-        val mine = new File(root, s"pid-${ProcessHandle.current().pid()}")
+        purgeStale(root)
+        val self = ProcessHandle.current()
+        val mine = new File(root, s"pid-${self.pid()}")
         mine.mkdirs()
+        // written beside, then renamed: a concurrent purge never reads half a marker
+        startInstant(self).foreach { at =>
+          val tmp = new File(mine, StartMarker + ".tmp").toPath
+          Files.writeString(tmp, at)
+          Files.move(tmp, new File(mine, StartMarker).toPath,
+            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        }
         Some(mine.getAbsolutePath)
       }
   }

@@ -322,7 +322,9 @@ object Graph {
     // 12k-row edge list were ~¾ of doc_pagerank's wall. One hash exchange
     // keyed the way every consumer wants it (outdeg groupBy, aug join)
     // lets AQE size the cached width from bytes, not the producer's task
-    // count — scale-adaptive in both directions.
+    // count. AQE only coalesces downward, so the cached width is capped at
+    // spark.sql.shuffle.partitions: an edge list far larger than the
+    // session default is cached narrower than its producer's width.
     val e = (if (edgesDistinct) e0 else e0.distinct())
       .repartition(col("src")).persist()
     // materialize BEFORE fan-out: aug references e several times (join

@@ -58,5 +58,5 @@ object PartitionedTables {
   /** Read the partitioned events table (partition column `event_type`
     * is recovered from the directory names). */
   def eventsFromPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 }
