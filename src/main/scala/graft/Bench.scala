@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
 /** Benchmark main: one JSON line with per-query wall seconds.
@@ -30,10 +32,18 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
   * detail file. Unlike wall time these are noise-immune — they move only
   * when the plan moves.
   *
-  * Rolling reference (r11 verdict #2 and #4): a committed per-sf
-  * `bench_reference_<sf>.json` carries (a) best-known per-query medians —
-  * the flag rule compares against min(prior round, best-known), so a
-  * regression cannot hide behind an inflated prior — and (b) the last
+  * Codegen accounting: every rep also counts the classes Spark compiled
+  * (`CodegenMetrics`) and the compile time (`CodeGenerator.compileTime`);
+  * the detail file keeps rep 1 apart from the sum of the later reps. A
+  * later rep of a query compiles nothing unless its generated source
+  * differs from build to build or the codegen cache evicts, so a nonzero
+  * later-rep count is a noise-immune cache regression signal.
+  *
+  * Rolling reference (r11 verdict #2 and #4): a committed per-sf and
+  * per-core-count `bench_reference_<sf>[_c<cpus>].json` carries (a)
+  * best-known per-query medians — the flag rule compares against
+  * min(prior round, best-known), so a regression cannot hide behind an
+  * inflated prior — and (b) the last
   * run's shuffle write records; >1.3× record-volume moves either way ship
   * as `"shuffle_flags"` (expected empty), extending plan-drift detection
   * from the 10 ScaleShapeSpec-pinned queries to all 138. The file is
@@ -53,10 +63,12 @@ object Bench {
 
   /** One measured query: in-suite timings plus peak shuffle volume.
     * `tainted` — some rep's metering window was bounded by a timed-out
-    * bus drain, so the shuffle numbers are approximate, not exact. */
+    * bus drain, so the shuffle numbers are approximate, not exact.
+    * `compiles` / `compileNs` — classes compiled and compile nanoseconds,
+    * one entry per rep. */
   private final case class Timing(name: String, times: Vector[Double],
       status: String, shuffleBytes: Long, shuffleRecords: Long,
-      tainted: Boolean) {
+      tainted: Boolean, compiles: Vector[Long], compileNs: Vector[Long]) {
     def median: Double = times.sorted.apply((times.size - 1) / 2)
     def lo: Double = times.min
     def hi: Double = times.max
@@ -67,12 +79,16 @@ object Bench {
       reps: Int, meter: ShuffleMeter): Timing = {
     var status = "ok"
     val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val compiles = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val compileNs = scala.collection.mutable.ArrayBuffer.empty[Long]
     var peakB = 0L
     var peakR = 0L
     var tainted = false
     var rep = 0
     while (rep < reps && status == "ok") { // an error short-circuits reps
       meter.reset()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       try {
         val df = fn(spark, sfDir)
@@ -83,6 +99,8 @@ object Bench {
         case e: Throwable => status = "error:" + e.getClass.getSimpleName
       }
       times += (System.nanoTime() - t0) / 1e9
+      compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      compileNs += CodeGenerator.compileTime - ns0
       val (b, r) = meter.snapshot() // bus drain is outside the timed window
       tainted ||= meter.tainted
       if (b > peakB) peakB = b
@@ -97,7 +115,8 @@ object Bench {
       // Outside the timed window, so no rep's own wall is affected.
       if (rep < reps) System.gc()
     }
-    Timing(name, times.toVector, status, peakB, peakR, tainted)
+    Timing(name, times.toVector, status, peakB, peakR, tainted,
+      compiles.toVector, compileNs.toVector)
   }
 
   /** Extract a flat `"name": number` map from the first `"section":{...}`
@@ -125,15 +144,28 @@ object Bench {
     * cluster_safe_splits ran 10.51 s in-suite under a 22.05 s r10 prior
     * and was never flagged, though its known isolated level was 3.77 s.
     * The flag rule now compares against min(prior round, reference best),
-    * so an inflated prior cannot mask a regression from best-known. */
-  private def referencePath(sfDir: String): java.nio.file.Path = {
+    * so an inflated prior cannot mask a regression from best-known.
+    *
+    * Keyed by data dir AND core count: medians and partial-aggregate
+    * record counts both move with the `local[N]` width, so a 4-core run
+    * judged against 32-core numbers reads false `over_2x_best_known`
+    * and `shuffle_flags` entries. The committed references were recorded
+    * at local[32] and keep their unsuffixed names ([[cpuSuffix]]). */
+  private[graft] def referencePath(sfDir: String, cpus: String): java.nio.file.Path = {
     val key = java.nio.file.Paths.get(sfDir).getFileName.toString
-    java.nio.file.Paths.get(s"bench_reference_$key.json")
+    java.nio.file.Paths.get(s"bench_reference_$key${cpuSuffix(cpus)}.json")
   }
 
-  private def loadReference(sfDir: String): (Map[String, Double], Map[String, Double]) = {
+  /** File-name suffix of a run's core count: empty at local[32], the width
+    * every committed reference and unsuffixed `BENCH_r*.json` was recorded
+    * at, `_c<cpus>` otherwise (the `BENCH_r20_c8.json` convention). */
+  private def cpuSuffix(cpus: String): String =
+    if (cpus == "32") "" else s"_c$cpus"
+
+  private def loadReference(sfDir: String, cpus: String)
+      : (Map[String, Double], Map[String, Double]) = {
     import java.nio.file.Files
-    val p = referencePath(sfDir)
+    val p = referencePath(sfDir, cpus)
     if (!Files.isReadable(p)) (Map.empty, Map.empty)
     else {
       val txt = new String(Files.readAllBytes(p),
@@ -146,8 +178,8 @@ object Bench {
     * `sec` keeps the per-query minimum ever observed, `shuffle_records`
     * tracks the latest plan's volumes. Queries outside this run (e.g.
     * under SPARK_GRAFT_BENCH_ONLY) keep their existing entries. */
-  private def writeReference(sfDir: String, refSec: Map[String, Double],
-      refRec: Map[String, Double], results: Seq[Timing],
+  private def writeReference(sfDir: String, cpus: String,
+      refSec: Map[String, Double], refRec: Map[String, Double], results: Seq[Timing],
       isolated: Seq[(String, Timing)]): Unit = {
     val isoMed = isolated.map { case (n, t) => n -> t.median }.toMap
     val ok = results.filter(_.status == "ok")
@@ -167,25 +199,26 @@ object Bench {
     val recBody =
       rec.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":${v.toLong}""" }
         .mkString("{", ",", "}")
-    java.nio.file.Files.write(referencePath(sfDir),
+    java.nio.file.Files.write(referencePath(sfDir, cpus),
       (s"""{"sec":$body,\n"shuffle_records":$recBody}\n""")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Prior-round per-query medians, for the regression flag rule: from
     * `SPARK_GRAFT_BENCH_PRIOR` if set, else the highest-numbered
-    * `BENCH_r*.json` in the working directory (the repo root — the driver
-    * commits one per round). Flat regex parse of the `"queries"` object;
-    * bookkeeping keys (`_omitted`) skipped. Missing/unparseable → empty.
+    * `BENCH_r<n>[_c<cpus>].json` of this run's core count ([[cpuSuffix]])
+    * in the working directory (the repo root — one per round). Flat regex
+    * parse of the `"queries"` object; bookkeeping keys (`_omitted`) skipped. Missing/unparseable → empty.
     * NOTE: once the CURRENT round's BENCH file is committed, a same-round
     * re-run self-compares through this path — harmless now, because the
     * flag rule takes min(prior, reference best) and the reference file
     * keeps pre-inflation levels ([[loadReference]]). */
-  private def priorMedians(): (String, Map[String, Double]) = {
+  private def priorMedians(cpus: String): (String, Map[String, Double]) = {
     import java.nio.file.{Files, Paths}
     val explicit = sys.env.get("SPARK_GRAFT_BENCH_PRIOR").map(Paths.get(_))
     val picked = explicit.orElse {
-      val re = "BENCH_r(\\d+)\\.json".r
+      val re = ("BENCH_r(\\d+)" + java.util.regex.Pattern.quote(cpuSuffix(cpus)) +
+        "\\.json").r
       val dir = Paths.get(".")
       if (!Files.isDirectory(dir)) None
       else {
@@ -241,6 +274,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // every core by default; pin SPARK_GRAFT_CPUS for reproducible runs
+    val cpus = Driver.cpus
     val spark = Driver.session()
     val meter = ShuffleMeter.attach(spark)
     // untimed JVM/codegen warmup so the alphabetically-first query does not
@@ -291,8 +325,8 @@ object Bench {
     // than 16 flag (a broad-elevation round must still adjudicate its
     // tail); disabled under SPARK_GRAFT_BENCH_ONLY (a targeted run IS
     // the isolation protocol).
-    val (priorFile, prior) = priorMedians()
-    val (refSec, refRec) = loadReference(sfDir)
+    val (priorFile, prior) = priorMedians(cpus)
+    val (refSec, refRec) = loadReference(sfDir, cpus)
     def bestKnown(name: String): Option[Double] =
       (prior.get(name).toSeq ++ refSec.get(name)).minOption
     val isoReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISO_REPS", "5")
@@ -354,7 +388,7 @@ object Bench {
       bestKnown)
 
     // roll the reference forward: best-known medians + this plan's volumes
-    writeReference(sfDir, refSec, refRec, results, isolated)
+    writeReference(sfDir, cpus, refSec, refRec, results, isolated)
 
     def r3(x: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, x)
     def r2(x: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, x)
@@ -365,6 +399,13 @@ object Bench {
     val shuffle = results.map { t =>
       "\"" + t.name + "\":[" + t.shuffleBytes + "," + t.shuffleRecords + "]"
     }.mkString("{", ",", "}")
+    // per query [rep 1, sum of later reps]: classes compiled, compile ms
+    def repSplit(f: Timing => Vector[Long], unit: Long): String = results.map { t =>
+      val v = f(t)
+      "\"" + t.name + "\":[" + v.take(1).sum / unit + "," + v.drop(1).sum / unit + "]"
+    }.mkString("{", ",", "}")
+    val codegenClasses = repSplit(_.compiles, 1L)
+    val codegenMs = repSplit(_.compileNs, 1000000L)
     val isoSpread = spreadJson(isolated.map(_._2))
     // error map capped: in a pathological all-queries-fail run an unbounded
     // list would blow the final line past the harness tail and lose the
@@ -394,8 +435,10 @@ object Bench {
     java.nio.file.Files.write(detailPath,
       (s"""{"detail":"[lo,median,hi]","reps":$reps,"spread":$spread,""" +
         s""""shuffle_write_bytes_records":$shuffle,""" +
+        s""""codegen_classes_rep1_later":$codegenClasses,""" +
+        s""""codegen_ms_rep1_later":$codegenMs,""" +
         s""""drain_timeouts":$drainTimeouts,""" +
-        s""""prior":"$priorFile","reference":"${referencePath(sfDir)}",""" +
+        s""""prior":"$priorFile","reference":"${referencePath(sfDir, cpus)}",""" +
         s""""shuffle_flags":$shuffleFlagsJson,"iso_reps":$isoReps,""" +
         s""""iso_omitted":$isoOmitted,"isolated":$isoSpread,""" +
         s""""over_2x_best_known":$over2xJson}\n""")

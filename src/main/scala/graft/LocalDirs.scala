@@ -3,13 +3,20 @@ package graft
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
+import org.apache.spark.sql.internal.StaticSQLConf
+
 import scala.jdk.OptionConverters._
 import scala.util.Try
 
-/** Shuffle/spill local-dir selection for the driver mains (guide §6 —
-  * file layout; §2.1 — local disk bandwidth for shuffle files can be the
-  * tighter limit).
+/** The builder-time (static) settings of every graft session: the
+  * shuffle/spill local dir and the size of Spark's generated-class cache.
+  * Both are read once, when the SparkContext starts or when the first
+  * class is generated, so neither can be set later with `spark.conf.set`;
+  * [[configure]] is the one builder hook that `Driver.session` and the
+  * perfbench harness go through.
   *
+  * Spill dir (guide §6 — file layout; §2.1 — local disk bandwidth for
+  * shuffle files can be the tighter limit).
   * Mechanism, measured at local[32]/sf0.1: every map task of a tiny
   * pinned-width stage was paying a ~0.2-0.35 s constant, most of it
   * Shuffle Write Time — 32 concurrent writers creating and committing
@@ -94,8 +101,24 @@ object LocalDirs {
       }
   }
 
-  /** Apply [[resolve]] to a builder. */
+  /** Entries of Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`,
+    * Spark's default 100). The cache maps generated source to its compiled
+    * class; Guava splits it into 4 segments that each evict LRU at a
+    * quarter of the maximum. One warm pass over the 144 registry queries
+    * needs about 1,858 distinct classes, olap_small alone about 155, so at
+    * 100 every pass Janino-recompiled nearly every class it ran (a warm
+    * pass of perfbench's olap_small slice compiled 151). 4096 gives each
+    * segment about 2× its share of the registry's working set; the
+    * classes cost ~14 MB of metaspace.
+    * It is a static SQL conf, fixed at the first codegen in the JVM, so
+    * it is set here and is not a knob. */
+  val CodegenCacheEntries: Int = 4096
+
+  /** Apply the builder-time settings: the [[resolve]]d local dir, if any,
+    * and [[CodegenCacheEntries]]. */
   def configure(b: org.apache.spark.sql.SparkSession.Builder)
-      : org.apache.spark.sql.SparkSession.Builder =
-    resolve().fold(b)(d => b.config("spark.local.dir", d))
+      : org.apache.spark.sql.SparkSession.Builder = {
+    val sized = b.config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
+    resolve().fold(sized)(d => sized.config("spark.local.dir", d))
+  }
 }

@@ -19,11 +19,16 @@ object Profiler {
     * with row/null/distinct counts and min/max rendered as strings (so
     * heterogeneous column types share one result schema).
     *
-    * ONE scan: all per-column aggregates run in a single `agg` (Catalyst
-    * plans multiple DISTINCT aggregates via Expand — the exact-cardinality
-    * cost; at extreme scale pass `exact = false` to switch to
-    * HyperLogLog++ `approx_count_distinct`, identical plan shape minus the
-    * Expand). The wide single-row result is then exploded to long format —
+    * ONE scan. With `exact`, the distinct counts run as one grouping set
+    * per column, in `cols` order: an Expand emits each row once per
+    * column carrying only that column's value, one aggregate keeps each
+    * (column, value) pair with its multiplicity, and a global aggregate
+    * reads every count, min and max off those pairs. Catalyst would plan
+    * several DISTINCT aggregates the same way, but it orders the Expand
+    * by a hash of expression ids, so each build generated different code
+    * and missed the codegen cache. `exact = false` switches to
+    * HyperLogLog++ `approx_count_distinct` in a single aggregate, no
+    * Expand. The wide single-row result is then exploded to long format —
     * driver cost is O(columns), never O(rows).
     *
     * Numeric render contract: fractional columns are profiled as
@@ -32,22 +37,40 @@ object Profiler {
   def profile(df: DataFrame, cols: Seq[(String, Column)],
               exact: Boolean = true): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
-    val aggs = count(lit(1)).as("_rows") +: cols.flatMap { case (n, c) => Seq(
-      count(c).as(s"_nn_$n"),
-      (if (exact) count_distinct(c) else approx_count_distinct(c))
-        .as(s"_nd_$n"),
-      min(c).cast("string").as(s"_min_$n"),
-      max(c).cast("string").as(s"_max_$n"))
-    }
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(explode(array(cols.map { case (n, _) =>
+    val wide =
+      if (exact) {
+        val vs = cols.indices.map(j => col(s"_v$j"))
+        val pairs = df.select(cols.zipWithIndex.map { case ((_, c), j) => c.as(s"_v$j") }: _*)
+          .groupingSets(vs.map(Seq(_)), vs: _*)
+          .agg(count(lit(1)).as("_m"), grouping(vs.head).as("_g0"))
+        // per-column sums are null on empty input, where count would be 0
+        def total(c: Column): Column = coalesce(sum(c), lit(0L))
+        val aggs = total(when(col("_g0") === 0, col("_m"))).as("_rows") +:
+          cols.indices.flatMap { j => Seq(
+            total(when(vs(j).isNotNull, col("_m"))).as(s"_nn_$j"),
+            count(vs(j)).as(s"_nd_$j"),
+            min(vs(j)).cast("string").as(s"_min_$j"),
+            max(vs(j)).cast("string").as(s"_max_$j"))
+          }
+        pairs.agg(aggs.head, aggs.tail: _*)
+      } else {
+        val aggs = count(lit(1)).as("_rows") +: cols.zipWithIndex.flatMap {
+          case ((_, c), j) => Seq(
+            count(c).as(s"_nn_$j"),
+            approx_count_distinct(c).as(s"_nd_$j"),
+            min(c).cast("string").as(s"_min_$j"),
+            max(c).cast("string").as(s"_max_$j"))
+        }
+        df.agg(aggs.head, aggs.tail: _*)
+      }
+    wide.select(explode(array(cols.zipWithIndex.map { case ((n, _), j) =>
         struct(
           lit(n).as("column"),
           col("_rows").as("n_rows"),
-          (col("_rows") - col(s"_nn_$n")).as("n_null"),
-          col(s"_nd_$n").as("n_distinct"),
-          col(s"_min_$n").as("min_str"),
-          col(s"_max_$n").as("max_str"))
+          (col("_rows") - col(s"_nn_$j")).as("n_null"),
+          col(s"_nd_$j").as("n_distinct"),
+          col(s"_min_$j").as("min_str"),
+          col(s"_max_$j").as("max_str"))
       }: _*)).as("p"))
       .select(col("p.*"))
   }

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins [[Bench.over2xResiduals]] — the r17-verdict gate that makes a
   * silent >2×-of-best-known bench residual impossible. The driver's
   * official run ends with this list in the JSON line; these tests are
-  * the schema/semantics contract for it. */
+  * the schema/semantics contract for it. Also pins the reference file's
+  * key (data dir and core count). */
 class BenchSpec extends AnyFunSuite {
 
   private val best = Map("a" -> 1.0, "b" -> 0.951, "c" -> 2.606)
@@ -53,5 +54,17 @@ class BenchSpec extends AnyFunSuite {
       Map("z" -> 9.0, "a" -> 9.0, "m" -> 9.0), Map.empty,
       (_: String) => Some(1.0))
     assert(r.map(_._1) == Vector("a", "m", "z"))
+  }
+
+  test("references are keyed by data dir and core count; local[32] keeps " +
+    "the committed names") {
+    assert(Bench.referencePath("/data/sf0.1", "32").toString ==
+      "bench_reference_sf0.1.json")
+    assert(Bench.referencePath("/data/sf0.1", "4").toString ==
+      "bench_reference_sf0.1_c4.json")
+    assert(Bench.referencePath("testdata-sf1.0", "8").toString ==
+      "bench_reference_testdata-sf1.0_c8.json")
+    // the committed local[32] reference is still found (cwd = repo root)
+    assert(java.nio.file.Files.isReadable(Bench.referencePath("sf0.1", "32")))
   }
 }

@@ -19,6 +19,7 @@ class BinRangeJoinRuleSpec extends SparkSpec {
         .appName("graft-binrule-test")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
+        .config(SparkSpec.CodegenCache, LocalDirs.CodegenCacheEntries.toLong)
         .withExtensions(new graft.functions.GraftExtensions)
         .getOrCreate()
       f(ext)

@@ -48,6 +48,7 @@ class CompressSpec extends SparkSpec {
         .master("local[4]").appName("graft-compress-ext")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
+        .config(SparkSpec.CodegenCache, LocalDirs.CodegenCacheEntries.toLong)
         .withExtensions(new graft.functions.GraftExtensions)
         .getOrCreate()
       val r = ext.sql(

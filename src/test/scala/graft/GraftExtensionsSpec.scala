@@ -19,6 +19,7 @@ class GraftExtensionsSpec extends SparkSpec {
         .appName("graft-ext-test")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
+        .config(SparkSpec.CodegenCache, LocalDirs.CodegenCacheEntries.toLong)
         .withExtensions(new graft.functions.GraftExtensions)
         .getOrCreate()
       val one = ext.sql(

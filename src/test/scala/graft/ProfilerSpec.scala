@@ -39,6 +39,25 @@ class ProfilerSpec extends SparkSpec {
     assert(approx == 10L)
   }
 
+  test("profile: empty input and an all-null column give zero counts, " +
+    "null min/max, in both variants") {
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("s", StringType)))
+    def rows(df: org.apache.spark.sql.DataFrame, exact: Boolean) =
+      Profiler.profile(df, Seq("k" -> col("k"), "s" -> col("s")), exact)
+        .collect().map(_.toSeq).toSet
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema)
+    val nullS = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, null), Row(1L, null))), schema)
+    for (exact <- Seq(true, false)) {
+      assert(rows(empty, exact) == Set(
+        Seq("k", 0L, 0L, 0L, null, null), Seq("s", 0L, 0L, 0L, null, null)))
+      assert(rows(nullS, exact) == Set(
+        Seq("k", 2L, 0L, 1L, "1", "1"), Seq("s", 2L, 2L, 0L, null, null)))
+    }
+  }
+
   test("ruleViolations: conditional counts in one scan; NULL predicate " +
     "counts as NOT violated") {
     val df = spark.createDataFrame(Seq(
