@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session bootstrap of the driver mains (Bench, Verify, Explain,
   * GenData): master, shuffle width, UTC session time zone, UI off, log
-  * level and the [[LocalDirs]] builder-time settings (spill dir, codegen
-  * cache size), set the same way for all.
+  * level and the [[LocalDirs]] builder-time settings (codegen cache size),
+  * set the same way for all.
   */
 object Driver {
 

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
     // SPARK_GRAFT_MASTER lets the multi-executor gate run the SAME dump
     // under local-cluster[n,c,m] — real serialization, network shuffle and

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sizing and gating policy shared by the operators: how wide a stage
@@ -285,10 +285,10 @@ object Sizing {
     }
   }
 
-  /** The shuffle spill directory the pair-stage disk guards measure. */
+  /** The shuffle spill directory the pair-stage disk guards measure: the
+    * first local dir Spark itself resolved for this context. */
   private[graft] def spillDir(spark: SparkSession): java.io.File =
-    new java.io.File(spark.conf.get("spark.local.dir",
-      System.getProperty("java.io.tmpdir", "/tmp")).split(",").head)
+    new java.io.File(GraftExpressionBridge.configuredLocalDirs(spark).head)
 
   /** Disk budget for one quadratic candidate stage's transient shuffle/
     * sort spill ([[PairSpillBudgetConf]]). The default is a third of the

@@ -44,11 +44,10 @@ class CompressSpec extends SparkSpec {
     org.apache.spark.sql.SparkSession.clearDefaultSession()
     org.apache.spark.sql.SparkSession.clearActiveSession()
     try {
-      val ext = org.apache.spark.sql.SparkSession.builder()
+      val ext = LocalDirs.configure(org.apache.spark.sql.SparkSession.builder())
         .master("local[4]").appName("graft-compress-ext")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
-        .config(SparkSpec.CodegenCache, LocalDirs.CodegenCacheEntries.toLong)
         .withExtensions(new graft.functions.GraftExtensions)
         .getOrCreate()
       val r = ext.sql(

@@ -179,6 +179,14 @@ class DedupSpec extends SparkSpec {
     assert(single.nonEmpty)
   }
 
+  test("spillDir is the local dir Spark itself spills to") {
+    val dir = Sizing.spillDir(spark)
+    // the driver's file root is <local dir>/spark-<uuid>/userFiles-<uuid>
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory())
+    assert(dir.getCanonicalFile == root.getParentFile.getParentFile.getCanonicalFile,
+      s"spillDir $dir, Spark's file root $root")
+  }
+
   test("pairSpillBudget default never exceeds a third of the spill dir's " +
     "usable space (no fixed floor over a small or RAM-backed dir)") {
     // ADVICE r20 #2: an 8 GiB floor planned 8 GiB of spill into any dir

@@ -14,12 +14,11 @@ class GraftExtensionsSpec extends SparkSpec {
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
-      val ext = SparkSession.builder()
+      val ext = LocalDirs.configure(SparkSession.builder())
         .master("local[4]")
         .appName("graft-ext-test")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
-        .config(SparkSpec.CodegenCache, LocalDirs.CodegenCacheEntries.toLong)
         .withExtensions(new graft.functions.GraftExtensions)
         .getOrCreate()
       val one = ext.sql(

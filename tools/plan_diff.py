@@ -15,12 +15,7 @@ normalized before comparing:
   lose their RDD id and the call-site line number, which move with any
   edit above the call;
 - JVM object names (`EventStreams$$$Lambda$6799/0x00007f39e1bc5950@40984b9b`)
-  lose their class number and identity hash;
-- the column lists of a node's detail lines (`Input`, `Output`, `Keys`,
-  `Results`, `Functions`, `Aggregate Attributes`, `Arguments`) compare as
-  multisets of items: Catalyst orders distinct-aggregate groups by a hash
-  of their expression ids, so the same query lists its Expand columns in a
-  different order from one run to the next.
+  lose their class number and identity hash.
 
 Everything else (the operator tree, partitioning, join strategies, join and
 filter conditions, pushed filters, codegen stages) must match. The first
@@ -40,21 +35,12 @@ NORMALIZE = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"#\d+"), "#N"),
 ]
-COLUMN_LIST = re.compile(
-    r"^(Input|Output|Keys|Results|Functions|Aggregate Attributes|Arguments)\b")
-ITEM = re.compile(r"[^\s,\[\]()]+")
 
 
 def normalize(line):
     for pattern, repl in NORMALIZE:
         line = pattern.sub(repl, line)
     return line.rstrip()
-
-
-def key(line):
-    """What a normalized line is compared by."""
-    m = COLUMN_LIST.match(line)
-    return (m.group(1), tuple(sorted(ITEM.findall(line)))) if m else line
 
 
 def plans(path):
@@ -81,7 +67,7 @@ def main(argv):
     differing = []
     for name in list(parent) + [n for n in change if n not in parent]:
         p, c = parent.get(name), change.get(name)
-        if p is None or c is None or list(map(key, p)) != list(map(key, c)):
+        if p is None or c is None or p != c:
             differing.append(name)
     if not differing:
         print(f"plans identical: {len(parent)} queries")
