@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
-/** The builder-time (static) settings of every graft session. They are
-  * read once, when the SparkContext starts or when the first class is
-  * generated, so none can be set later with `spark.conf.set`;
+/** The builder-time settings of every graft session. The codegen cache
+  * size is read once, when the first class is generated, so it cannot be
+  * set later with `spark.conf.set`;
   * [[configure]] is the one builder hook that `Driver.session`, the test
   * sessions and the perfbench harness go through.
   *
@@ -27,8 +27,17 @@ object LocalDirs {
     * it is set here and is not a knob. */
   val CodegenCacheEntries: Int = 4096
 
-  /** Apply the builder-time settings: [[CodegenCacheEntries]]. */
+  /** Apply the builder-time settings: [[CodegenCacheEntries]], and
+    * whole-stage codegen class names without the stage id
+    * (`spark.sql.codegen.useIdInClassName=false`). AQE numbers codegen
+    * stages in the order it plans query stages, so with the id in the
+    * generated source two sibling stages that swap places between builds
+    * miss the cache and recompile (image_similarity, cm_top_term_counts:
+    * 2–8 classes per build). Without it the source of a stage depends only
+    * on the stage, and identical stages of different queries share a
+    * class. A fixed setting, not a knob: the id is only a debugging aid. */
   def configure(b: org.apache.spark.sql.SparkSession.Builder)
       : org.apache.spark.sql.SparkSession.Builder =
     b.config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
+      .config(SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key, false)
 }

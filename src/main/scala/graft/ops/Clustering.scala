@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.RowFunctions
 
 /** Distributed k-means over embedding columns — the clustering primitive
   * behind semantic dedup ("keep one doc per meaning-cluster") and
@@ -24,7 +25,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (the same loop as Spark MLlib's KMeans):
   *  - quantized input persisted once, read once per iteration (narrow);
-  *  - assignment is a map against k·d broadcast literals — no shuffle;
+  *  - assignment is a map against k·d broadcast literals — no shuffle —
+  *    and each distance is one codegen'd `graft_sq_l2` kernel call, not
+  *    Spark's interpreted `zip_with`/`aggregate` (k calls per row, every
+  *    Lloyd iteration);
   *  - centroid update is posexplode → groupBy(cluster, dim) → sum: the
   *    shuffle is map-side combined, so each partition emits ≤ k·d rows
   *    regardless of row count;
@@ -50,10 +54,12 @@ object Clustering {
           x.cast("string")))))
 
   /** Exact squared L2 distance between a quantized array column and a
-    * centroid literal, folded in array order (BIGINT throughout). */
+    * centroid literal, folded in array order (BIGINT throughout): the
+    * codegen'd `graft_sq_l2` kernel ([[graft.functions.RowFunctions.sqL2]]),
+    * which returns what `aggregate(zip_with(q, c, (a, b) -> (a - b) *
+    * (a - b)), 0L, (acc, x) -> acc + x)` returns, overflow included. */
   private[ops] def dist2(q: Column, c: Seq[Long]): Column =
-    aggregate(zip_with(q, typedLit(c), (a, b) => (a - b) * (a - b)),
-      lit(0L), (acc, x) => acc + x)
+    RowFunctions.sqL2(q, RowFunctions.longArray(c))
 
   /** Nearest-centroid assignment of a quantized (item_id, q) frame against
     * a centroid literal matrix: (item_id, q, cluster, dist2), ties to the

@@ -87,9 +87,7 @@ object Pq {
     (0 until cb.m).map { s =>
       val cents = typedLit(cb.centroids(s).map(_.toSeq))
       val cent = element_at(cents, (element_at(codes, s + 1) + 1).cast("int"))
-      aggregate(
-        zip_with(subVec(q, s, cb.subDim), cent, (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x)
+      graft.functions.RowFunctions.sqL2(subVec(q, s, cb.subDim), cent)
     }.reduce(_ + _)
 
   /** The m nearest-centroid code indexes of a quantized vector column, as

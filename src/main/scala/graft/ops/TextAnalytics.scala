@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * Reference semantics re-expressed:
   *  - P6 tokenizer (`a1p2a_ahuja.py:20` split-on-space;
   *    `a1p2b_ahuja.py:68` regex multi-delimiter split; word-boundary
-  *    contract from Assignment-1 spec p.2 (ii)(2)) → one
-  *    `explode(split(lower(text), "[^a-z0-9]+"))` — codegen'd, no UDF.
+  *    contract from Assignment-1 spec p.2 (ii)(2)) → [[tokensCol]]:
+  *    Spark's `lower`, then the codegen'd `graft_tokens` byte scan for
+  *    `[a-z0-9]` runs — no regex, no UDF, no interpreted lambda.
   *  - A1 word count (`a1p2a_ahuja.py:20`) → groupBy(token).count.
   *  - J2 vocabulary semi join (`a1p2b_ahuja.py:70`) — see
   *    [[Relational.broadcastSemiJoin]].
@@ -23,7 +24,9 @@ object TextAnalytics {
 
   /** Word-boundary contract: a token is a maximal run of [a-z0-9] after
     * lowercasing — "Marketing." tokenizes to "marketing";
-    * "supermarketing" does not (Assignment-1 spec p.2 (ii)(2)). */
+    * "supermarketing" does not (Assignment-1 spec p.2 (ii)(2)). The
+    * delimiter regex of that contract; [[tokensCol]] scans for the runs
+    * without it, and RowKernelsSpec pins the two to the same tokens. */
   val TokenPattern = "[^a-z0-9]+"
 
   /** Small English stopword list used by quality scoring and language ID.
@@ -32,8 +35,14 @@ object TextAnalytics {
     "a", "an", "and", "are", "as", "at", "be", "by", "for", "from", "in",
     "is", "it", "of", "on", "or", "that", "the", "to", "with")
 
+  /** The one tokenizer of every text and dedup operator:
+    * `graft_tokens(lower(text))`, equal to `filter(split(lower(text),
+    * TokenPattern), t -> t != "")`. Case mapping stays Spark's own `Lower`
+    * (ICU or JDK, e.g. U+212A KELVIN SIGN → "k"); the kernel replaces
+    * only the regex split and the empty-token filter, which Spark runs
+    * interpreted (`ArrayFilter` is `CodegenFallback`). */
   def tokensCol(text: Column): Column =
-    filter(split(lower(text), TokenPattern), t => t =!= "")
+    graft.functions.RowFunctions.tokens(lower(text))
 
   /** P6: (id, text) → one row per token. */
   def tokenize(df: DataFrame, id: Column, text: Column): DataFrame =

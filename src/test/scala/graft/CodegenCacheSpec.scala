@@ -14,12 +14,14 @@ class CodegenCacheSpec extends SparkSpec {
   /** Twelve olap-style registry queries: parquet, csv, jsonl, orc and
     * partitioned reads, joins, windows, a range join, an as-of join, the
     * exact column profile (whose plan once changed from build to build)
-    * and text operators. */
+    * and text operators; and cm_top_term_counts, whose sibling codegen
+    * stages trade stage ids from build to build. */
   private val names = Seq(
     "customers_in_region", "custs_no_p_orders", "distinct_segments",
     "asof_purchase_click", "events_near_errors", "sliding_event_counts",
     "csv_event_type_stats", "orc_event_stats", "partitioned_click_stats",
-    "profile_customer", "approx_distinct_users", "doc_stats")
+    "profile_customer", "approx_distinct_users", "doc_stats",
+    "cm_top_term_counts")
 
   /** Classes compiled while the queries run and fold, once each. */
   private def round(): Map[String, Long] = names.map { n =>
