@@ -18,14 +18,11 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
   * `target/bench_detail.json`, so a single multi-tenant-box hiccup is
   * visible instead of masquerading as a regression.
   *
-  * Self-adjudication: after the main loop, any in-suite median that reads
-  * as a regression (vs the prior round's BENCH_r*.json medians, or vs its
-  * own lo) is RE-RUN in isolation — alone, after the suite, post-GC — and
-  * the isolated medians ship in both the JSON line (`"isolated"`) and the
-  * detail file. Prior rounds burned their verdict lead items adjudicating
-  * in-suite outliers by hand (r8 jaccard 8.90 s in-suite vs 3.71 s
-  * isolated — pure suite-context noise); this makes the adjudication part
-  * of the bench run itself.
+  * Between reps, outside the timed window, Bench releases everything the
+  * rep left cached or persisted (lineage cuts included), so no rep times
+  * its predecessor's blocks. An in-suite median that needs adjudicating
+  * is re-run alone, one fresh JVM per query, with
+  * `tools/bench_jvm_isolated.py`.
   *
   * Shuffle accounting: every rep also records shuffle bytes/records
   * written ([[ShuffleMeter]]); the per-query PEAK across reps goes to the
@@ -41,7 +38,7 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
   *
   * Rolling reference (r11 verdict #2 and #4): a committed per-sf and
   * per-core-count `bench_reference_<sf>[_c<cpus>].json` carries (a)
-  * best-known per-query medians — the flag rule compares against
+  * best-known per-query medians — `over_2x_best_known` compares against
   * min(prior round, best-known), so a regression cannot hide behind an
   * inflated prior — and (b) the last
   * run's shuffle write records; >1.3× record-volume moves either way ship
@@ -106,17 +103,18 @@ object Bench {
       if (b > peakB) peakB = b
       if (r > peakR) peakR = r
       rep += 1
-      // Inter-REP hygiene (r20), same mechanism and rationale as the
-      // inter-QUERY System.gc() below (r15 verdict #1): a rep's lineage
-      // cuts leave dead localCheckpoint/shuffle blocks that only the
-      // ContextCleaner frees after a driver GC, so later reps of the SAME
-      // query time their predecessor's garbage (measured: doc_pagerank
-      // rep walls growing 6.7 → 22.9 s across 7 reps at local[32]).
-      // Outside the timed window, so no rep's own wall is affected.
-      if (rep < reps) System.gc()
+      releaseAll(spark)
     }
     Timing(name, times.toVector, status, peakB, peakR, tainted,
       compiles.toVector, compileNs.toVector)
+  }
+
+  /** Drop every cached query and every persisted RDD, lineage cuts
+    * included: what a rep left behind. Valid only because Bench runs one
+    * query at a time, so nothing live can still read them. */
+  private def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
   /** Extract a flat `"name": number` map from the first `"section":{...}`
@@ -135,15 +133,15 @@ object Bench {
   }
 
   /** Rolling per-sf reference (committed at the repo root): best-known
-    * per-query medians (`sec` — min over every in-suite/isolated number
-    * ever recorded for this sf) and the last run's shuffle write records
+    * per-query medians (`sec` — min over every in-suite median ever
+    * recorded for this sf) and the last run's shuffle write records
     * (`shuffle_records` — a plan-shape fingerprint, not a minimum).
     *
     * Why (r11 verdict #2): flagging against the prior ROUND alone lets a
     * query whose prior number was itself inflated hide — r11's
     * cluster_safe_splits ran 10.51 s in-suite under a 22.05 s r10 prior
     * and was never flagged, though its known isolated level was 3.77 s.
-    * The flag rule now compares against min(prior round, reference best),
+    * `over_2x_best_known` compares against min(prior round, reference best),
     * so an inflated prior cannot mask a regression from best-known.
     *
     * Keyed by data dir AND core count: medians and partial-aggregate
@@ -179,13 +177,11 @@ object Bench {
     * tracks the latest plan's volumes. Queries outside this run (e.g.
     * under SPARK_GRAFT_BENCH_ONLY) keep their existing entries. */
   private def writeReference(sfDir: String, cpus: String,
-      refSec: Map[String, Double], refRec: Map[String, Double], results: Seq[Timing],
-      isolated: Seq[(String, Timing)]): Unit = {
-    val isoMed = isolated.map { case (n, t) => n -> t.median }.toMap
+      refSec: Map[String, Double], refRec: Map[String, Double],
+      results: Seq[Timing]): Unit = {
     val ok = results.filter(_.status == "ok")
     val sec = ok.foldLeft(refSec) { (acc, t) =>
-      val best = (Seq(t.median) ++ isoMed.get(t.name) ++ acc.get(t.name)).min
-      acc.updated(t.name, best)
+      acc.updated(t.name, (t.median +: acc.get(t.name).toSeq).min)
     }
     // tainted windows (timed-out bus drain) must not become the new
     // plan-shape baseline — keep the last clean recording
@@ -204,14 +200,14 @@ object Bench {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  /** Prior-round per-query medians, for the regression flag rule: from
+  /** Prior-round per-query medians, for the `over_2x_best_known` gate: from
     * `SPARK_GRAFT_BENCH_PRIOR` if set, else the highest-numbered
     * `BENCH_r<n>[_c<cpus>].json` of this run's core count ([[cpuSuffix]])
     * in the working directory (the repo root — one per round). Flat regex
     * parse of the `"queries"` object; bookkeeping keys (`_omitted`) skipped. Missing/unparseable → empty.
     * NOTE: once the CURRENT round's BENCH file is committed, a same-round
     * re-run self-compares through this path — harmless now, because the
-    * flag rule takes min(prior, reference best) and the reference file
+    * gate takes min(prior, reference best) and the reference file
     * keeps pre-inflation levels ([[loadReference]]). */
   private def priorMedians(cpus: String): (String, Map[String, Double]) = {
     import java.nio.file.{Files, Paths}
@@ -244,27 +240,22 @@ object Bench {
     }.getOrElse(("none", Map.empty))
   }
 
-  /** The >2×-of-best-known residual gate (r17 verdict #2): the
-    * self-adjudication loop re-runs suspicious medians in isolation, but
-    * until this key existed a run could still END with an isolated median
-    * above 2× best-known and nobody but a judge reading per-query tables
-    * would notice (r17: triangle_counts 2.95×, jaccard_prefix_pairs
-    * 2.31× — both silent). Every suite query whose EFFECTIVE median —
-    * its isolated re-run when one happened, its in-suite median
-    * otherwise — exceeds `2 × bestKnown + 0.2 s` ships as
-    * `(name, effectiveMedian, bestKnown)`. Expected EMPTY on a clean
-    * run; a non-empty list is the driver-visible "adjudicate me" signal
-    * (fresh-JVM REPS=5 alone-run + fingerprint compare, the PROBE.md
-    * protocol). The 0.2 s absolute guard keeps sub-second scheduling
-    * jitter out, matching the isolation flag rule. */
-  private[graft] def over2xResiduals(
-      suiteMedians: Map[String, Double], isoMedians: Map[String, Double],
+  /** The >2×-of-best-known residual gate (r17 verdict #2): without this
+    * key a run could END with a median above 2× best-known and nobody but
+    * a judge reading per-query tables would notice (r17: triangle_counts
+    * 2.95×, jaccard_prefix_pairs 2.31× — both silent). Every suite query
+    * whose median exceeds `2 × bestKnown + 0.2 s` ships as
+    * `(name, median, bestKnown)`. Expected EMPTY on a clean run; a
+    * non-empty list is the driver-visible "adjudicate me" signal
+    * (`tools/bench_jvm_isolated.py` plus a fingerprint compare, the
+    * PROBE.md protocol). Medians under 0.5 s and the 0.2 s absolute guard
+    * keep sub-second scheduling jitter out. */
+  private[graft] def over2xResiduals(suiteMedians: Map[String, Double],
       bestKnown: String => Option[Double]): Vector[(String, Double, Double)] =
     suiteMedians.iterator
       .filter { case (_, med) => med >= 0.5 }
       .flatMap { case (n, med) =>
-        val eff = isoMedians.getOrElse(n, med)
-        bestKnown(n).collect { case b if eff > 2.0 * b + 0.2 => (n, eff, b) }
+        bestKnown(n).collect { case b if med > 2.0 * b + 0.2 => (n, med, b) }
       }.toVector.sortBy(_._1)
 
   def main(args: Array[String]): Unit = {
@@ -296,71 +287,15 @@ object Bench {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val results = queries.map { case (name, fn) =>
-      val t = runOne(spark, sfDir, name, fn, reps, meter)
-      // suite hygiene (r15 verdict #1): every query's lineage cuts leave
-      // dead localCheckpoint + shuffle blocks behind, and across 141
-      // queries the accumulated storage/GC pressure inflates LATER
-      // queries' walls order-dependently (doc_pagerank read 12.8 s in the
-      // r15 end-of-round suite vs 5.9 s targeted, same plan fingerprint;
-      // same mechanism as the sf3 suite-pressure note, PROBE.md r14). A
-      // driver GC between queries lets ContextCleaner release them —
-      // outside any timed window, so per-query walls are unaffected.
-      System.gc()
-      t
+      runOne(spark, sfDir, name, fn, reps, meter)
     }
 
-    // ---- self-adjudication (r10 verdict #1): re-run suspicious medians
-    // in isolation. A query is flagged when its in-suite median reads
-    // 1.3× over min(prior-round median, reference best-known) — the min
-    // (r11 verdict #2) stops an inflated prior from masking a regression
-    // from best-known, and catches the tight-all-high signature, where
-    // lo/med/hi inflate together and a spread test sees nothing — OR 2×
-    // over its own lo (the classic suite-noise signature, lo ≪ med).
-    // Floor 0.5 s: sub-half-second medians are inside this box's
-    // scheduling jitter and re-running them only adds noise rows. The
-    // isolation budget is RATIO-prioritized (r14 verdict #1: sorting by
-    // raw median let ann_ivf_topk at 2.25x best-known escape a saturated
-    // cap while 1.4x queries burned the budget): flagged queries re-run
-    // worst-regression-first, and the cap self-raises to 32 when more
-    // than 16 flag (a broad-elevation round must still adjudicate its
-    // tail); disabled under SPARK_GRAFT_BENCH_ONLY (a targeted run IS
-    // the isolation protocol).
     val (priorFile, prior) = priorMedians(cpus)
     val (refSec, refRec) = loadReference(sfDir, cpus)
+    // min(prior round, reference best): an inflated prior cannot mask a
+    // regression from best-known (r11 verdict #2)
     def bestKnown(name: String): Option[Double] =
       (prior.get(name).toSeq ++ refSec.get(name)).minOption
-    val isoReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISO_REPS", "5")
-      .toInt.max(3)
-    val flagged =
-      if (only.isDefined) Vector.empty
-      else results.iterator.filter { t =>
-        t.status == "ok" && t.median >= 0.5 && (
-          // 1.3× (was 1.5×, r13 verdict #6): simhash_md5_pairs +1.06 s
-          // and doc_pagerank +0.74 s sat under 1.5× in r13 and needed a
-          // manual isolated pass that confirmed suite noise — 1.3× would
-          // have self-adjudicated both in-run at the cost of a few extra
-          // isolated re-runs (still capped at 16)
-          bestKnown(t.name).exists(p => t.median > 1.3 * p + 0.2) ||
-            t.median > 2.0 * t.lo)
-      }.toVector
-    // regression severity, not absolute wall: median over best-known
-    // (or over its own lo for queries with no prior), so a 0.5 s query
-    // at 3x outranks a 10 s query at 1.4x
-    def isoRatio(t: Timing): Double =
-      t.median / (bestKnown(t.name).getOrElse(t.lo) + 0.05)
-    val prioritized = flagged.sortBy(t => (-isoRatio(t), -t.median))
-    // defensive parse: a malformed/negative override must not throw AFTER
-    // the full suite already ran (losing the whole report at the end) —
-    // fall back to the computed default instead
-    val isoCap = sys.env.get("SPARK_GRAFT_BENCH_ISO_CAP")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 0)
-      .getOrElse(if (flagged.size > 16) flagged.size.min(32) else 16)
-    val isoOmitted = (flagged.size - isoCap).max(0)
-    val byName = queries.toMap
-    val isolated = prioritized.take(isoCap).map { t =>
-      System.gc() // shed suite GC debt; isolation should measure the query
-      t.name -> runOne(spark, sfDir, t.name, byName(t.name), isoReps, meter)
-    }
 
     // ---- shuffle-volume regression (r11 verdict #4): unlike wall time,
     // shuffle write records move only when the plan (or data) moves —
@@ -384,18 +319,16 @@ object Bench {
       results.iterator.collect {
         case t if t.status == "ok" && !only.isDefined => t.name -> t.median
       }.toMap,
-      isolated.map { case (n, t) => n -> t.median }.toMap,
       bestKnown)
 
     // roll the reference forward: best-known medians + this plan's volumes
-    writeReference(sfDir, cpus, refSec, refRec, results, isolated)
+    writeReference(sfDir, cpus, refSec, refRec, results)
 
     def r3(x: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, x)
     def r2(x: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, x)
-    def spreadJson(ts: Seq[Timing]): String = ts.map { t =>
+    val spread = results.map { t =>
       "\"" + t.name + "\":[" + r3(t.lo) + "," + r3(t.median) + "," + r3(t.hi) + "]"
     }.mkString("{", ",", "}")
-    val spread = spreadJson(results)
     val shuffle = results.map { t =>
       "\"" + t.name + "\":[" + t.shuffleBytes + "," + t.shuffleRecords + "]"
     }.mkString("{", ",", "}")
@@ -406,7 +339,6 @@ object Bench {
     }.mkString("{", ",", "}")
     val codegenClasses = repSplit(_.compiles, 1L)
     val codegenMs = repSplit(_.compileNs, 1000000L)
-    val isoSpread = spreadJson(isolated.map(_._2))
     // error map capped: in a pathological all-queries-fail run an unbounded
     // list would blow the final line past the harness tail and lose the
     // WHOLE report — keep the first few, count the rest
@@ -439,16 +371,9 @@ object Bench {
         s""""codegen_ms_rep1_later":$codegenMs,""" +
         s""""drain_timeouts":$drainTimeouts,""" +
         s""""prior":"$priorFile","reference":"${referencePath(sfDir, cpus)}",""" +
-        s""""shuffle_flags":$shuffleFlagsJson,"iso_reps":$isoReps,""" +
-        s""""iso_omitted":$isoOmitted,"isolated":$isoSpread,""" +
+        s""""shuffle_flags":$shuffleFlagsJson,""" +
         s""""over_2x_best_known":$over2xJson}\n""")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // isolated medians ride in the main line (they're the adjudication
-    // verdict: isolated ≈ prior ⇒ the in-suite number was suite noise);
-    // the <= 32 cap keeps this ≤ ~800 chars, and the query-map packer
-    // below sizes itself around whatever this costs (baseLen)
-    val iso = isolated.map { case (n, t) => "\"" + n + "\":" + r2(t.median) }
-      .mkString("{", ",", "}")
     // shuffle_flags in the main line is capped like the error map — a
     // pathological drift-everywhere run must not blow the stdout tail
     val sfShown = shuffleFlags.take(8).map { case (n, (p, c)) =>
@@ -458,7 +383,7 @@ object Bench {
                   else sfShown :+ s""""_more":${shuffleFlags.size - 8}""")
       .mkString("{", ",", "}")
     // over_2x_best_known in the main line, capped like shuffle_flags —
-    // expected empty; each entry is "name":[effectiveMedian, bestKnown]
+    // expected empty; each entry is "name":[median, bestKnown]
     val o2Shown = over2x.take(8).map { case (n, eff, b) =>
       "\"" + n + "\":[" + r2(eff) + "," + r2(b) + "]"
     }
@@ -466,7 +391,7 @@ object Bench {
                   else o2Shown :+ s""""_more":${over2x.size - 8}""")
       .mkString("{", ",", "}")
     def fullLine(q: String) =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$q,"isolated":$iso,"shuffle_flags":$sfLine,"over_2x_best_known":$o2Line,"errors":$errs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$q,"shuffle_flags":$sfLine,"over_2x_best_known":$o2Line,"errors":$errs,"sf":"$sfDir"}"""
     // the harness tail window is ~2000 chars: pack per-query medians
     // slowest-first until the budget is hit, count the rest in "_omitted"
     // (the sub-tail entries are the ~0.2 s queries nobody reads one by

@@ -4,6 +4,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Sums shuffle WRITE bytes/records across all tasks between `reset()`
   * and `snapshot()` — the bench-side plan-shape signal. Wall time on a
@@ -24,7 +27,6 @@ import org.apache.spark.sql.SparkSession
 final class ShuffleMeter private (spark: SparkSession) extends SparkListener {
   private val writeBytes = new AtomicLong
   private val writeRecords = new AtomicLong
-  private val spillBytesAcc = new AtomicLong
   private val drainTimedOut = new java.util.concurrent.atomic.AtomicBoolean
 
   override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
@@ -41,7 +43,6 @@ final class ShuffleMeter private (spark: SparkSession) extends SparkListener {
     if (m != null && taskEnd.reason == org.apache.spark.Success) {
       writeBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       writeRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      spillBytesAcc.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
     }
   }
 
@@ -49,7 +50,6 @@ final class ShuffleMeter private (spark: SparkSession) extends SparkListener {
     val clean = drain()
     writeBytes.set(0L)
     writeRecords.set(0L)
-    spillBytesAcc.set(0L)
     // a dirty reset means the PREVIOUS query's in-flight task-end events
     // will land in THIS window — mark it contaminated from the start
     drainTimedOut.set(!clean)
@@ -60,13 +60,6 @@ final class ShuffleMeter private (spark: SparkSession) extends SparkListener {
     if (!drain()) drainTimedOut.set(true)
     (writeBytes.get, writeRecords.get)
   }
-
-  /** Memory+disk bytes spilled by successful tasks since `reset()` — the
-    * under-width signal the jaccard sf3 audit needed (r14 verdict #3):
-    * wall time can't distinguish "more data" from "same data sorted
-    * through too few partitions", spill bytes can. Read AFTER
-    * [[snapshot]] (which drains the bus) for an exact window. */
-  def spilledBytes: Long = spillBytesAcc.get
 
   /** True when any bus drain bounding the current window timed out: the
     * numbers may include a neighbour query's events (or miss this one's
@@ -113,29 +106,34 @@ object ShuffleMeter {
     * executions; iterative operators' in-loop shuffles are measured by
     * the [[ShuffleMeter]] listener in Bench, which owns its JVM. */
   def planShuffleWrite(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    var bytes = 0L
-    var records = 0L
-    val seen = scala.collection.mutable.HashSet.empty[Int]
-    def collect(p: SparkPlan): Unit = {
-      p.metrics.get("shuffleBytesWritten").foreach(m => bytes += m.value)
-      p.metrics.get("shuffleRecordsWritten").foreach(m => records += m.value)
+    // adaptive plans and query stages only wrap: the exchange inside
+    // carries the shuffle metrics and is visited on its own
+    val ops = planNodes(df.queryExecution.executedPlan).filter {
+      case _: AdaptiveSparkPlanExec | _: QueryStageExec => false
+      case _ => true
     }
+    def total(metric: String): Long = ops.flatMap(_.metrics.get(metric)).map(_.value).sum
+    (total("shuffleBytesWritten"), total("shuffleRecordsWritten"))
+  }
+
+  /** Every node of an executed physical plan, once: adaptive plans are
+    * followed into their current plan, query stages into the stage they
+    * wrap, and every operator into its subqueries. A reused exchange is
+    * not emitted; its original is. */
+  private[graft] def planNodes(plan: SparkPlan): Vector[SparkPlan] = {
+    val out = Vector.newBuilder[SparkPlan]
+    val seen = scala.collection.mutable.HashSet.empty[Int]
     def walk(p: SparkPlan): Unit =
       if (seen.add(System.identityHashCode(p))) {
         p match {
-          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-          // wrapper around the materialized exchange — recurse, don't
-          // collect twice
-          case q: QueryStageExec => walk(q.plan)
-          case _: ReusedExchangeExec => // counted at its original
-          case other => collect(other); other.children.foreach(walk)
+          case a: AdaptiveSparkPlanExec => out += a; walk(a.executedPlan)
+          case q: QueryStageExec => out += q; walk(q.plan)
+          case _: ReusedExchangeExec =>
+          case other => out += other; other.children.foreach(walk)
         }
         p.subqueries.foreach(walk)
       }
-    walk(df.queryExecution.executedPlan)
-    (bytes, records)
+    walk(plan)
+    out.result()
   }
 }

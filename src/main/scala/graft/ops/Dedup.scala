@@ -469,13 +469,9 @@ object Dedup {
             else slice.filter(
               pmod(xxhash64(col("band"), col("bucket"), lit(7919L)),
                 lit(sub.toLong)) === lit(q.toLong))
-          val v = Checkpoints.cut(verified(ss, math.max(parts, w / sub + 1)))
-          // the finished pass's shuffle files are only deleted once the
-          // ContextCleaner sees its dependencies unreachable — without a
-          // driver GC here, pass p+1 races pass p's spill for the same
-          // disk budget (the Bench inter-query System.gc() precedent)
-          System.gc()
-          v
+          // the cut frees this pass's shuffle files before the next pass
+          // spills against the same disk budget
+          Checkpoints.cut(verified(ss, math.max(parts, w / sub + 1)))
         }
       }
       outs.reduce(_.union(_)).distinct().orderBy("id_a", "id_b")

@@ -32,9 +32,9 @@ object Graph {
     // branches reference the edge list, and similarity-pair inputs carry
     // an expensive pipeline (minhash etc.) that would otherwise run twice
     // inside the first materialization job
-    val base = Checkpoints.cut(edges
-      .select(src.cast("long").as("a"), dst.cast("long").as("b")))
+    val base = cutEdges(edges, src, dst)
     val (labels, converged) = labelPropagation(base, maxIter)
+    Checkpoints.release(base)
     // a partial label set is a WRONG answer (one real cluster reported as
     // several, duplicate keepers downstream) — fail loudly, never return it
     require(converged,
@@ -45,10 +45,16 @@ object Graph {
     labels
   }
 
+  /** The (a, b) long edge list every component operator starts from,
+    * behind one lineage cut. */
+  private def cutEdges(edges: DataFrame, src: Column, dst: Column): DataFrame =
+    Checkpoints.cut(edges.select(src.cast("long").as("a"), dst.cast("long").as("b")))
+
   /** Min-label propagation over a pre-normalized, lineage-cut (a, b) edge
     * list: (labels, reached-fixpoint). Labels are PARTIAL when the flag is
     * false — callers must either throw ([[connectedComponents]]) or
-    * discard and re-route ([[dedupClusters]]'s star fallback). */
+    * discard and re-route ([[dedupClusters]]'s star fallback). The labels
+    * are the only cut left behind; `base` stays the caller's. */
   private def labelPropagation(base: DataFrame, maxIter: Int)
       : (DataFrame, Boolean) = {
     // closed neighborhood via explicit self-loops: each round is then ONE
@@ -60,8 +66,9 @@ object Graph {
     // previous round's labels, so an uncut lineage grows per round —
     // exponential plan size by round ~20. Checkpointing truncates the plan
     // to the materialized result, keeping every round's plan constant-size.
-    var labels = Checkpoints.cut(undirected.select(col("a").as("id"))
+    val initial = Checkpoints.cut(undirected.select(col("a").as("id"))
       .distinct().withColumn("comp", col("id")))
+    var labels = initial
     // ONE distinct (r19 opt): the old shape dedup'd the full 4|E|-row
     // symmetrized+self-loop stream AND ran a second distinct for the label
     // init — but the groupBy-min below is idempotent under duplicate
@@ -90,10 +97,13 @@ object Graph {
       val nextSum = labelSum(next)
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
+      // the initial labels stay while the persisted sym may re-read them
+      if (labels ne initial) Checkpoints.release(labels)
       labels = next
       iter += 1
     }
     sym.unpersist(blocking = false)
+    Checkpoints.release(initial)
     (labels, converged)
   }
 
@@ -124,12 +134,12 @@ object Graph {
   private[graft] def dedupClustersRouted(pairs: DataFrame, idA: Column,
       idB: Column, lpBudget: Int = 8): (DataFrame, String) = {
     require(lpBudget > 0, s"lpBudget must be positive, got $lpBudget")
-    val base = Checkpoints.cut(pairs
-      .select(idA.cast("long").as("a"), idB.cast("long").as("b")))
+    val base = cutEdges(pairs, idA, idB)
     val (lp, converged) = labelPropagation(base, lpBudget)
+    // the losing route's cuts go; star labels still read base
     val (labels, route) =
-      if (converged) (lp, "lp")
-      else (connectedComponentsStar(base, col("a"), col("b")), "star")
+      if (converged) { Checkpoints.release(base); (lp, "lp") }
+      else { Checkpoints.release(lp); (starContraction(base, StarMaxIter)._1, "star") }
     (labels.select(col("id"), col("comp"),
       (col("id") === col("comp")).as("keep")), route)
   }
@@ -155,17 +165,18 @@ object Graph {
     * aggregate, O(1) driver rows. Each round's result is checkpointed
     * ([[Checkpoints.cut]]) so plans stay constant-size. */
   def connectedComponentsStar(edges: DataFrame, src: Column, dst: Column,
-                              maxIter: Int = 50): DataFrame =
-    starContraction(edges, src, dst, maxIter)._1
+                              maxIter: Int = StarMaxIter): DataFrame =
+    starContraction(cutEdges(edges, src, dst), maxIter)._1
 
-  /** [[connectedComponentsStar]] plus the converged round count (round
-    * growth is the scale contract). */
-  private[graft] def starContraction(edges: DataFrame, src: Column,
-                                     dst: Column, maxIter: Int)
+  private val StarMaxIter = 50
+
+  /** [[connectedComponentsStar]] over an already cut (a, b) long edge
+    * list, plus the converged round count (round growth is the scale
+    * contract). The labels read `base` and the last round's cut; every
+    * earlier round's cut is released. */
+  private[graft] def starContraction(base: DataFrame, maxIter: Int)
       : (DataFrame, Int) = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    val base = Checkpoints.cut(edges
-      .select(src.cast("long").as("a"), dst.cast("long").as("b")))
     val nodes = base.select(explode(array(col("a"), col("b"))).as("id"))
       .distinct()
     // canonical orientation child > parent; self-loops carry no
@@ -223,6 +234,7 @@ object Graph {
       val cur = checksum(next)
       converged = cur._1 == prev._1 && cur._2.compareTo(prev._2) == 0
       prev = cur
+      Checkpoints.release(e)
       e = next
       iter += 1
     }
@@ -369,6 +381,7 @@ object Graph {
     var ranks = aug.filter(col("d").isNull)
       .select(col("src").as("node"),
         when(col("base") > 0, lit(1000000L)).otherwise(lit(0L)).as("r"))
+    var lastCut: Option[DataFrame] = None // superseded by the next cut
     for (i <- 1 to iterations) {
       ranks = aug.join(ranks, aug("src") === ranks("node"))
         .select(aug("dst").as("to"),
@@ -378,12 +391,16 @@ object Graph {
         .groupBy(col("to").as("node"))
         .agg(expr("CAST(sum(base) + (85 * sum(c)) div 100 AS BIGINT)")
           .as("r"))
-      if (i % checkpointInterval == 0 && i < iterations)
+      if (i % checkpointInterval == 0 && i < iterations) {
         ranks = Checkpoints.cut(ranks)
+        lastCut.foreach(Checkpoints.release)
+        lastCut = Some(ranks)
+      }
     }
     // materialize BEFORE unpersisting: the loop is lazy, so dropping the
     // cached edge list first would force every iteration to rebuild it
     val out = Checkpoints.cut(ranks)
+    lastCut.foreach(Checkpoints.release)
     e.unpersist(blocking = false)
     aug.unpersist(blocking = false)
     out

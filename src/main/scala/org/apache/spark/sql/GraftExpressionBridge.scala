@@ -8,9 +8,9 @@ import org.apache.spark.util.Utils
   * its own packages: the `private[sql]` `classic.ExpressionUtils` between
   * graft's custom Catalyst expressions and the public Column API (Spark 4
   * removed `new Column(expr)`), and the `private[spark]` local-dir
-  * resolution of `util.Utils`. Hence this one-file shim living in the
-  * `org.apache.spark.sql` package (the conventional pattern for Spark
-  * extension libraries).
+  * resolution of `util.Utils` and shuffle cleanup of `ContextCleaner`.
+  * Hence this one-file shim living in the `org.apache.spark.sql` package
+  * (the conventional pattern for Spark extension libraries).
   */
 object GraftExpressionBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -20,4 +20,14 @@ object GraftExpressionBridge {
     * order and from the sources Spark itself reads them. */
   def configuredLocalDirs(spark: SparkSession): Seq[String] =
     Utils.getConfiguredLocalDirs(spark.sparkContext.conf).toSeq
+
+  /** Unregister each shuffle from the map-output tracker and delete its
+    * files: what the `ContextCleaner` does once a shuffle dependency is
+    * garbage-collected, and as it does by default, without blocking. A
+    * no-op when reference tracking (`spark.cleaner.referenceTracking`)
+    * is off. */
+  def cleanupShuffles(spark: SparkSession, shuffleIds: Iterable[Int]): Unit =
+    spark.sparkContext.cleaner.foreach { c =>
+      shuffleIds.foreach(c.doCleanupShuffle(_, blocking = false))
+    }
 }

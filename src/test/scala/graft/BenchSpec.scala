@@ -13,46 +13,34 @@ class BenchSpec extends AnyFunSuite {
 
   test("clean run yields an empty list") {
     assert(Bench.over2xResiduals(
-      Map("a" -> 1.2, "b" -> 1.1, "c" -> 3.0), Map.empty, best.get).isEmpty)
+      Map("a" -> 1.2, "b" -> 1.1, "c" -> 3.0), best.get).isEmpty)
   }
 
-  test("isolated median clears a suite-noise flag; a persistent one stays") {
-    // b in-suite 3.31 (>2x of 0.951) but isolated 1.0 — suite noise, clear
-    val cleared = Bench.over2xResiduals(
-      Map("b" -> 3.31), Map("b" -> 1.0), best.get)
-    assert(cleared.isEmpty)
-    // the r17 shape: triangle_counts iso 2.81 vs best 0.951 = 2.95x
-    val persistent = Bench.over2xResiduals(
-      Map("b" -> 3.31), Map("b" -> 2.81), best.get)
-    assert(persistent == Vector(("b", 2.81, 0.951)))
-  }
-
-  test("suite median is the effective value when no isolated re-run happened") {
-    assert(Bench.over2xResiduals(Map("c" -> 6.03), Map.empty, best.get) ==
+  test("a median over 2x its best-known ships with that best-known") {
+    assert(Bench.over2xResiduals(Map("c" -> 6.03), best.get) ==
       Vector(("c", 6.03, 2.606)))
   }
 
   test("sub-0.5s medians and queries without a best-known are excluded") {
     // 0.4 s is 4x of 0.05 but inside scheduling jitter — floored out
     assert(Bench.over2xResiduals(
-      Map("a" -> 0.4), Map.empty, (_: String) => Some(0.05)).isEmpty)
+      Map("a" -> 0.4), (_: String) => Some(0.05)).isEmpty)
     // no best-known: nothing to be 2x OF
     assert(Bench.over2xResiduals(
-      Map("new_query" -> 9.0), Map.empty, best.get).isEmpty)
+      Map("new_query" -> 9.0), best.get).isEmpty)
   }
 
   test("the 0.2s absolute guard keeps near-threshold jitter out") {
     // 2x of 0.5 = 1.0; 1.15 is over 2x but under 2x + 0.2
     assert(Bench.over2xResiduals(
-      Map("a" -> 1.15), Map.empty, (_: String) => Some(0.5)).isEmpty)
+      Map("a" -> 1.15), (_: String) => Some(0.5)).isEmpty)
     assert(Bench.over2xResiduals(
-      Map("a" -> 1.25), Map.empty, (_: String) => Some(0.5)).nonEmpty)
+      Map("a" -> 1.25), (_: String) => Some(0.5)).nonEmpty)
   }
 
   test("output is name-sorted (stable across runs for diffing)") {
     val r = Bench.over2xResiduals(
-      Map("z" -> 9.0, "a" -> 9.0, "m" -> 9.0), Map.empty,
-      (_: String) => Some(1.0))
+      Map("z" -> 9.0, "a" -> 9.0, "m" -> 9.0), (_: String) => Some(1.0))
     assert(r.map(_._1) == Vector("a", "m", "z"))
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 import graft.ops.{Dedup, Sizing, TextAnalytics, VectorOps}
+import graft.ops.CheckpointsSpec.{cutShuffles, unfreed}
 
 /** Dedup kernels: native-expression parity with Spark's xxhash64, LSH
   * collision guarantees, and end-to-end pair extraction. */
@@ -96,12 +97,15 @@ class DedupSpec extends SparkSpec {
     val single = try run() finally conf.unset("spark.graft.pairSpillBudget")
     conf.set("spark.graft.pairSpillBudget", "1") // 1 byte: cap kicks in
     conf.set("spark.graft.pairMaxPasses", "4")   // pinned for test speed
-    val staged = try run() finally {
+    val (staged, passShuffles) = try cutShuffles(spark)(run()) finally {
       conf.unset("spark.graft.pairSpillBudget")
       conf.unset("spark.graft.pairMaxPasses")
     }
     assert(staged == single)
     assert(single.nonEmpty)
+    // every pass's cut freed its shuffles, no driver GC involved
+    assert(passShuffles.nonEmpty)
+    assert(unfreed(spark, passShuffles).isEmpty)
   }
 
   test("jaccardPrefixPairs: the sort-merge verify fallback (broadcast " +
@@ -170,13 +174,15 @@ class DedupSpec extends SparkSpec {
     conf.set("spark.graft.pairSpillBudget", "1")
     conf.set("spark.graft.pairMaxPasses", "2")
     conf.set("spark.graft.pairSpillUsable", "1") // 1 usable byte: sub=16
-    val staged = try run() finally {
+    val (staged, passShuffles) = try cutShuffles(spark)(run()) finally {
       conf.unset("spark.graft.pairSpillBudget")
       conf.unset("spark.graft.pairMaxPasses")
       conf.unset("spark.graft.pairSpillUsable")
     }
     assert(staged == single)
     assert(single.nonEmpty)
+    assert(passShuffles.nonEmpty)
+    assert(unfreed(spark, passShuffles).isEmpty)
   }
 
   test("spillDir is the local dir Spark itself spills to") {

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.ops.Graph
+import graft.ops.{Checkpoints, Graph}
 
 /** Connected components / dedup clustering over similarity-pair edges. */
 class GraphSpec extends SparkSpec {
@@ -42,7 +43,7 @@ class GraphSpec extends SparkSpec {
     val n = 10000L
     val chain = spark.range(n - 1)
       .select(col("id").as("a"), (col("id") + 1L).as("b"))
-    val (labels, rounds) = Graph.starContraction(chain, col("a"), col("b"),
+    val (labels, rounds) = Graph.starContraction(Checkpoints.cut(chain),
       maxIter = 50)
     import org.apache.spark.sql.functions.{count_if, min => fmin, max => fmax}
     val r = labels.agg(count_if(col("comp") === 0L),
@@ -217,11 +218,42 @@ class GraphSpec extends SparkSpec {
     // the adversarial shape for label propagation (99 rounds); star
     // contraction must land well under the default budget
     val e = edges((0 until 99).map(i => (i.toLong, i + 1L)))
-    val (labels, rounds) = Graph.starContraction(e, col("a"), col("b"),
+    val (labels, rounds) = Graph.starContraction(Checkpoints.cut(e),
       maxIter = 50)
     val out = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.size == 100 && out.values.forall(_ == 0L))
     assert(rounds <= 12, s"path-100 took $rounds star rounds")
+  }
+
+  /** The cut RDDs `out` reads. */
+  private def cutsRead(out: org.apache.spark.sql.DataFrame): Set[Int] =
+    out.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+
+  test("connectedComponents leaves persisted only the cuts its result " +
+    "reads, however many rounds it ran") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // path 0-1-...-6: six propagation rounds plus the one that confirms
+    val out = Graph.connectedComponents(
+      edges((0 until 6).map(i => (i.toLong, i + 1L))), col("a"), col("b"))
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(cutsRead(out).nonEmpty)
+    assert(added == cutsRead(out))
+    assert(out.collect().map(_.getLong(1)).toSet == Set(0L))
+  }
+
+  test("star contraction leaves persisted only the cuts its labels read") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (labels, rounds) = Graph.starContraction(
+      Checkpoints.cut(edges((0 until 30).map(i => (i.toLong, i + 1L)))),
+      maxIter = 50)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(rounds >= 3)
+    // the input edges and the last round's edges
+    assert(cutsRead(labels).size == 2)
+    assert(added == cutsRead(labels))
+    assert(labels.collect().map(_.getLong(1)).toSet == Set(0L))
   }
 
   test("star contraction agrees with label propagation on mixed shapes") {

@@ -15,7 +15,10 @@ normalized before comparing:
   lose their RDD id and the call-site line number, which move with any
   edit above the call;
 - JVM object names (`EventStreams$$$Lambda$6799/0x00007f39e1bc5950@40984b9b`)
-  lose their class number and identity hash.
+  lose their class number and identity hash;
+- lambda variables (`lambda x_25`) are renumbered per plan in order of
+  first appearance. Spark numbers them from one JVM-wide counter, so one
+  lambda added early in a dump would otherwise renumber every later plan.
 
 Everything else (the operator tree, partitioning, join strategies, join and
 filter conditions, pushed filters, codegen stages) must match. The first
@@ -35,12 +38,24 @@ NORMALIZE = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"#\d+"), "#N"),
 ]
+LAMBDA = re.compile(r"\blambda (\w+?)_\d+\b")
 
 
 def normalize(line):
     for pattern, repl in NORMALIZE:
         line = pattern.sub(repl, line)
     return line.rstrip()
+
+
+def renumber_lambdas(lines):
+    """`lines` with each distinct lambda variable numbered by its first
+    appearance in them."""
+    order = {}
+
+    def sub(m):
+        n = order.setdefault(m.group(0), len(order))
+        return f"lambda {m.group(1)}_{n}"
+    return [LAMBDA.sub(sub, line) for line in lines]
 
 
 def plans(path):
@@ -53,9 +68,10 @@ def plans(path):
                 current = out.setdefault(m.group(1), [])
             elif current is not None:
                 current.append(normalize(raw))
-    for lines in out.values():
+    for name, lines in out.items():
         while lines and not lines[-1]:
             lines.pop()
+        out[name] = renumber_lambdas(lines)
     return out
 
 
