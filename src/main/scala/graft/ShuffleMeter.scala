@@ -1,9 +1,10 @@
 package graft
 
+import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -20,9 +21,9 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   * so the write side is the stable one-number-per-exchange measure.
   *
   * Task-end events arrive on the async listener bus; both `reset` and
-  * `snapshot` first drain the bus (`LiveListenerBus.waitUntilEmpty`, via
-  * reflection — public in bytecode but `private[spark]` to scalac) so the
-  * window is exact: whatever ran strictly between the two calls.
+  * `snapshot` first drain the bus (`LiveListenerBus.waitUntilEmpty`,
+  * `private[spark]`, through [[GraftExpressionBridge]]) so the window is
+  * exact: whatever ran strictly between the two calls.
   */
 final class ShuffleMeter private (spark: SparkSession) extends SparkListener {
   private val writeBytes = new AtomicLong
@@ -74,15 +75,9 @@ final class ShuffleMeter private (spark: SparkSession) extends SparkListener {
     * saturation clears within the second window) and report failure
     * rather than silently proceeding with a half-delivered window. */
   private def drain(): Boolean = {
-    val sc = spark.sparkContext
     def once(): Boolean =
-      try {
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        true
-      } catch {
-        case _: ReflectiveOperationException => false
-      }
+      try { GraftExpressionBridge.waitUntilEmpty(spark); true }
+      catch { case _: TimeoutException => false }
     once() || once()
   }
 }

@@ -1281,18 +1281,18 @@ object SparkEntry {
 
     // ---- dedup clusters: similarity pairs → connected components → keep
     // list (min-id representative per cluster; Graph.scala scaladoc).
-    // Explicitly the LABEL-PROPAGATION twin, so both algorithms stay under
-    // the same recursive-CTE oracle (the production dedupClusters entry
-    // point now routes through star contraction — see dedup_components_star)
+    // The routed production entry: near-clique near-dup graphs converge
+    // inside the label-propagation budget, and dedup_components_star forces
+    // the star route, so both algorithms stay under one recursive-CTE oracle
     "dedup_components" -> ((s, dir) =>
       Graph.connectedComponents(nearDupEdges(dupCorpus(s, dir)), col("id_a"), col("id_b"))
         .select(col("id"), col("comp"), (col("id") === col("comp")).as("keep"))
         .orderBy("id")),
 
     // ---- same clustering via large-star/small-star contraction — the
-    // O(log² n)-rounds twin for adversarial diameters (label propagation
-    // pays one round per hop of the longest chain); identical semantics,
-    // so it shares dedup_components' recursive-CTE oracle ----------------
+    // O(log² n)-rounds route for adversarial diameters (label propagation
+    // pays one round per hop of the longest chain), forced; identical
+    // semantics, so it shares dedup_components' recursive-CTE oracle -----
     "dedup_components_star" -> ((s, dir) =>
       Graph.connectedComponentsStar(nearDupEdges(dupCorpus(s, dir)), col("id_a"), col("id_b"))
         .select(col("id"), col("comp"), (col("id") === col("comp")).as("keep"))

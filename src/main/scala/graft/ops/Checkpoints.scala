@@ -2,6 +2,7 @@ package graft.ops
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftExpressionBridge}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -26,10 +27,13 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   *    Nothing reads them again: the cut's rows come from its blocks (a
   *    lost local block fails the query instead of recomputing) or from
   *    its reliable checkpoint files;
-  *  - its blocks stay until [[release]], or until Spark's ContextCleaner
-  *    finds the cut unreachable after a driver GC. Release a cut once no
-  *    live frame reads it: a loop releases the cut it replaces, but not
-  *    one that a persisted frame, a later join or the result still reads.
+  *  - its blocks, or its reliable checkpoint files, stay until
+  *    [[release]]; blocks also go when Spark's ContextCleaner finds the
+  *    cut unreachable after a driver GC (files only when
+  *    `spark.cleaner.referenceTracking.cleanCheckpoints` is set). Release
+  *    a cut once no live frame reads it: a loop releases the cut it
+  *    replaces, but not one that a persisted frame, a later join or the
+  *    result still reads.
   */
 object Checkpoints {
 
@@ -51,10 +55,17 @@ object Checkpoints {
     out
   }
 
-  /** Drop a cut's blocks. `cutDf` must be a frame [[cut]] returned, and no
-    * live frame may still read it: reading a released local cut fails. */
+  /** Drop a cut's blocks and delete a reliable cut's checkpoint files.
+    * `cutDf` must be a frame [[cut]] returned, and no live frame may still
+    * read it: reading a released cut fails. */
   def release(cutDf: DataFrame): Unit = cutDf.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: LogicalRDD =>
+      r.rdd.unpersist(blocking = false)
+      r.rdd.getCheckpointFile.foreach { f =>
+        val path = new Path(f)
+        path.getFileSystem(cutDf.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(path, true)
+      }
     case other =>
       throw new IllegalArgumentException(s"not a lineage cut: ${other.nodeName}")
   }

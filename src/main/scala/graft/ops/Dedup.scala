@@ -230,30 +230,26 @@ object Dedup {
     * make minhash noisy); false candidates at the corpus's background
     * J≲0.1 are still vanishingly rare (16·J⁴) and the exact verify
     * removes any that slip through. */
-  /** `partsHint` — explicit width for the pinned expansion stages. Use it
-    * when `df` sits behind a lineage cut (localCheckpoint/checkpoint):
-    * the cut CARRIES the upstream plan's estimated stats, and if those
-    * include a join's size-product estimate the width estimator here
-    * would pin tiny stages to the 32768-task cap (the measured capstone
-    * pathology, PROBE.md round 13). Pipelines know their corpus size from
-    * the source scan — pass that estimate through. */
+  /** `sizeSrc` — the frame whose size decides the pinned expansion width,
+    * the shared-kernel gate and the verify-broadcast bound, when `df`
+    * itself sits behind a lineage cut (localCheckpoint/checkpoint): the
+    * cut CARRIES the upstream plan's estimated stats, and if those include
+    * a join's size-product estimate the estimators here would pin tiny
+    * stages to the 32768-task cap (the measured capstone pathology,
+    * PROBE.md round 13) and open the gate on a sub-MB corpus. Pipelines
+    * pass their source scan. */
   /** `ordered = false` — skip the final deterministic orderBy: for callers
     * that consume the pairs as an order-irrelevant INTERMEDIATE (connected
     * components, pagerank edge lists, triangle counting, split assignment)
     * the sort is a pure range-exchange tax that gets materialized into
     * their own lineage cut. The pair SET is identical either way; terminal
     * (oracle-faced) callers keep the default. */
-  /** `gateSrc` — the frame whose leaf bytes decide the shared-kernel gate
-    * and the verify-broadcast estimate, when `df` itself sits behind
-    * lineage cuts whose carried stats are join-inflated (the same
-    * pathology `partsHint` exists for): pipelines pass their source scan. */
   def minhashDupPairs(df: DataFrame, id: Column, text: Column,
                       n: Int = 3, k: Int = 64, rowsPerBand: Int = 4,
                       jaccardThreshold: Double = 0.7,
                       maxBucket: Int = 1000,
-                      partsHint: Option[Int] = None,
                       ordered: Boolean = true,
-                      gateSrc: Option[DataFrame] = None): DataFrame = {
+                      sizeSrc: Option[DataFrame] = None): DataFrame = {
     // Shingle sets are carried as 8-byte hashes (set semantics preserved up
     // to negligible 64-bit collisions): cheaper to minhash, cheaper to join,
     // cheaper to intersect at verify time than the raw strings.
@@ -271,8 +267,8 @@ object Dedup {
     // block registrations per call, 3 reps × 9 family queries — and was
     // the measured cause of the family's in-suite walls running 2-4× their
     // isolated medians at local[32] (r19 verdict #1).
-    val gateDf = gateSrc.getOrElse(df)
-    val doCut = Sizing.sharedKernelCutOk(gateDf)
+    val sizeDf = sizeSrc.getOrElse(df)
+    val doCut = Sizing.sharedKernelCutOk(sizeDf)
     val sig = Sizing.widenKernelStage(df)
       .select(id.as("doc_id"), shingleHashes64(text, n).as("sh"))
     val base = if (doCut) Checkpoints.cut(sig) else sig
@@ -289,8 +285,7 @@ object Dedup {
     // row per ~75 input bytes; width floors at the session default and
     // grows with the corpus (same posture as the gram-stream operators)
     val pairs = bucketPairs(banded, col("did"), maxBucket,
-        pinnedParts = Some(partsHint.getOrElse(
-          Sizing.explodedShuffleParts(df, bytesPerRow = 75L))),
+        pinnedParts = Some(Sizing.explodedShuffleParts(sizeDf, bytesPerRow = 75L)),
         pairFilter = Some((a, b) => lengthOk(a("nsh"), b("nsh"),
           jaccardThreshold)))
       .select(col("id_a.doc_id").as("id_a"), col("id_b.doc_id").as("id_b"))
@@ -299,7 +294,7 @@ object Dedup {
       base.select(col("doc_id").as("id_b"), col("sh").as("_shb")),
       "id_a", "id_b",
       Sizing.verifyBroadcastOk(base, exact = doCut,
-        srcBytes = Sizing.leafPlanBytes(gateDf)),
+        srcBytes = Sizing.leafPlanBytes(sizeDf)),
       jaccardThreshold)
     if (ordered) verified.orderBy("id_a", "id_b") else verified
   }

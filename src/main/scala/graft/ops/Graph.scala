@@ -6,43 +6,60 @@ import org.apache.spark.sql.functions._
 /** Graph operators over edge lists — the step that turns pairwise
   * similarity output (minhash/simhash/embedding dup PAIRS) into usable
   * dedup CLUSTERS: connected components with a canonical representative
-  * (min id) per component, from which a keep/drop list is one filter.
+  * (min id) per component, from which a keep/drop list is one filter
+  * (`id === comp` keeps).
   *
-  * Algorithm: iterative min-label propagation (each round every node
-  * adopts the smallest label in its closed neighborhood) with a
-  * convergence check — Pregel semantics expressed as DataFrame joins.
-  * Rounds needed = eccentricity of the min-id node within its component;
-  * near-dup clusters are near-cliques, so 2–3 rounds in practice. Each
-  * round is one equi-join + one groupBy-min over the edge list — linear
-  * shuffles, no driver-side graph state (the driver sees only a one-row
-  * convergence count per round). For adversarial long-chain graphs the
-  * round count grows with the chain length; [[connectedComponentsStar]]
-  * (alternating large-star/small-star contraction, O(log² n) rounds on
-  * any diameter) is the drop-in twin for that regime.
+  * [[connectedComponents]] is the one components entry. It routes between
+  * two algorithms, both Pregel semantics expressed as DataFrame joins:
+  *  - min-label propagation (each round every node adopts the smallest
+  *    label in its closed neighborhood, one equi-join + one groupBy-min
+  *    over the edge list, a one-row convergence sum per round). Rounds
+  *    needed = eccentricity of the min-id node within its component;
+  *    near-dup clusters are near-cliques, so 2–3 rounds in practice;
+  *  - alternating large-star/small-star contraction ([[starContraction]],
+  *    O(log² n) rounds on any diameter), for the adversarial long-chain
+  *    graphs where label propagation pays one round per hop.
   */
 object Graph {
 
   /** (id, comp) for every node in `edges`, comp = min node id reachable.
     * Edges are treated as undirected; isolated nodes (absent from the
-    * edge list) are not emitted. */
-  def connectedComponents(edges: DataFrame, src: Column, dst: Column,
-                          maxIter: Int = 25): DataFrame = {
-    require(maxIter > 0, s"maxIter must be positive, got $maxIter")
+    * edge list) are not emitted.
+    *
+    * Routing: min-label propagation under a fixed [[LpBudget]]-round
+    * budget; if the fixpoint is not reached, the graph has a long path —
+    * the partial labels are discarded (never returned: one real cluster
+    * reported as several means duplicate keepers downstream) and star
+    * contraction runs instead. The common dedup graph is near-clique
+    * (minhash clusters, 2–4 propagation rounds at about half a star
+    * round's cost each; always-star measured 4.85 s vs 2.83 s label
+    * propagation isolated on the sf0.1 cluster_safe_splits chain, r10→r11
+    * adjudication), so it never pays the star premium; an adversarial
+    * transitive-boilerplate chain pays the budget's cheap rounds (~20% of
+    * its star cost). Both routes share one lineage-cut edge list, so the
+    * expensive upstream (minhash etc.) runs once regardless of route. */
+  def connectedComponents(edges: DataFrame, src: Column, dst: Column)
+      : DataFrame =
+    connectedComponentsRouted(edges, src, dst)._1
+
+  /** Label-propagation rounds [[connectedComponents]] spends before it
+    * re-routes to star contraction. */
+  private val LpBudget = 8
+
+  /** [[connectedComponents]] plus the route taken ("lp" | "star") — the
+    * spec entry point pinning the routing rule. */
+  private[graft] def connectedComponentsRouted(edges: DataFrame, src: Column,
+      dst: Column, lpBudget: Int = LpBudget): (DataFrame, String) = {
+    require(lpBudget > 0, s"lpBudget must be positive, got $lpBudget")
     // cut the caller's lineage ONCE before symmetrization: both union
     // branches reference the edge list, and similarity-pair inputs carry
     // an expensive pipeline (minhash etc.) that would otherwise run twice
     // inside the first materialization job
     val base = cutEdges(edges, src, dst)
-    val (labels, converged) = labelPropagation(base, maxIter)
-    Checkpoints.release(base)
-    // a partial label set is a WRONG answer (one real cluster reported as
-    // several, duplicate keepers downstream) — fail loudly, never return it
-    require(converged,
-      s"connectedComponents did not converge in $maxIter rounds — the graph " +
-        "has a longer path than expected; raise maxIter or use " +
-        "connectedComponentsStar (large-star/small-star) for adversarial " +
-        "diameters")
-    labels
+    val (lp, converged) = labelPropagation(base, lpBudget)
+    // the losing route's cuts go; star labels still read base
+    if (converged) { Checkpoints.release(base); (lp, "lp") }
+    else { Checkpoints.release(lp); (starContraction(base, StarMaxIter)._1, "star") }
   }
 
   /** The (a, b) long edge list every component operator starts from,
@@ -52,9 +69,8 @@ object Graph {
 
   /** Min-label propagation over a pre-normalized, lineage-cut (a, b) edge
     * list: (labels, reached-fixpoint). Labels are PARTIAL when the flag is
-    * false — callers must either throw ([[connectedComponents]]) or
-    * discard and re-route ([[dedupClusters]]'s star fallback). The labels
-    * are the only cut left behind; `base` stays the caller's. */
+    * false — [[connectedComponentsRouted]] discards them and re-routes.
+    * The labels are the only cut left behind; `base` stays the caller's. */
   private def labelPropagation(base: DataFrame, maxIter: Int)
       : (DataFrame, Boolean) = {
     // closed neighborhood via explicit self-loops: each round is then ONE
@@ -107,55 +123,13 @@ object Graph {
     (labels, converged)
   }
 
-  /** Dedup keep/drop list from similarity pairs: every node labeled with
-    * its cluster representative (min id) and whether it is the keeper.
-    *
-    * Auto-switch routing: min-label propagation under a bounded round
-    * budget, star-contraction fallback. This is the PRODUCTION entry
-    * point (corpus curation, cluster-safe splits): the COMMON dedup graph
-    * is near-clique (minhash clusters — 2–4 propagation rounds, each ONE
-    * equi-join + ONE groupBy-min, about half a star round's cost; always-
-    * star measured 4.85 s vs 2.83 s label-prop isolated on the sf0.1
-    * cluster_safe_splits chain, r10→r11 adjudication), but a crawl can
-    * always carry an adversarial transitive-boilerplate chain, where
-    * label propagation pays one round per hop. So: propagate for at most
-    * `lpBudget` rounds; if the fixpoint is not reached, the graph has a
-    * long path — discard the partial labels and re-run via
-    * [[connectedComponentsStar]] (O(log² n) rounds on ANY diameter). The
-    * adversarial case pays `lpBudget` cheap extra rounds (~20% of its
-    * star cost); the common case never pays the 2× star premium. Both
-    * routes share one lineage-cut edge materialization, so the expensive
-    * upstream (minhash etc.) runs once regardless of route. */
-  def dedupClusters(pairs: DataFrame, idA: Column, idB: Column): DataFrame =
-    dedupClustersRouted(pairs, idA, idB)._1
-
-  /** [[dedupClusters]] plus the route taken ("lp" | "star") — the spec
-    * entry point pinning the auto-switch heuristic. */
-  private[graft] def dedupClustersRouted(pairs: DataFrame, idA: Column,
-      idB: Column, lpBudget: Int = 8): (DataFrame, String) = {
-    require(lpBudget > 0, s"lpBudget must be positive, got $lpBudget")
-    val base = cutEdges(pairs, idA, idB)
-    val (lp, converged) = labelPropagation(base, lpBudget)
-    // the losing route's cuts go; star labels still read base
-    val (labels, route) =
-      if (converged) { Checkpoints.release(base); (lp, "lp") }
-      else { Checkpoints.release(lp); (starContraction(base, StarMaxIter)._1, "star") }
-    (labels.select(col("id"), col("comp"),
-      (col("id") === col("comp")).as("keep")), route)
-  }
-
   /** Connected components by alternating large-star/small-star contraction
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) — the adversarial-diameter twin of
-    * [[connectedComponents]]: label propagation needs `diameter` rounds
-    * (a 100-node chain = 99 rounds), star contraction halves path
-    * lengths every round and converges in O(log² n) rounds on ANY graph
-    * shape. Same output contract: (id, comp), comp = min reachable id,
-    * every node that appears in an edge emitted (self-loop-only nodes
-    * included). Prefer the label-propagation twin for near-clique
-    * similarity graphs (2–3 cheaper rounds); prefer this one when the
-    * graph may carry long chains (e.g. transitive boilerplate dup paths
-    * in a web crawl).
+    * SoCC 2014), always, whatever the diameter: the forced star route of
+    * [[connectedComponents]], kept for the `dedup_components_star` query
+    * so both algorithms stay under the same oracle. Same output contract:
+    * (id, comp), comp = min reachable id, every node that appears in an
+    * edge emitted (self-loop-only nodes included).
     *
     * Round shape: each phase is ONE groupBy-min plus ONE equi-join on the
     * SAME key (co-partitioned — the join reuses the groupBy's exchange),
@@ -164,9 +138,9 @@ object Graph {
     * per-round convergence check is a single (count, hash-sum) scalar
     * aggregate, O(1) driver rows. Each round's result is checkpointed
     * ([[Checkpoints.cut]]) so plans stay constant-size. */
-  def connectedComponentsStar(edges: DataFrame, src: Column, dst: Column,
-                              maxIter: Int = StarMaxIter): DataFrame =
-    starContraction(cutEdges(edges, src, dst), maxIter)._1
+  private[graft] def connectedComponentsStar(edges: DataFrame, src: Column,
+                                             dst: Column): DataFrame =
+    starContraction(cutEdges(edges, src, dst), StarMaxIter)._1
 
   private val StarMaxIter = 50
 
@@ -216,8 +190,8 @@ object Graph {
 
     // a round leaves the edge multiset (distinct, so set) unchanged ⇔
     // converged: compare (count, order-independent hash sum) — one scalar
-    // aggregate per round, same O(1)-driver-rows posture as the label
-    // twin's sum check (hash SUM in decimal, not xor: xor of an even
+    // aggregate per round, same O(1)-driver-rows posture as label
+    // propagation's sum check (hash SUM in decimal, not xor: xor of an even
     // number of identical values degenerates)
     def checksum(ed: DataFrame): (Long, java.math.BigDecimal) = {
       val r = ed.agg(count(lit(1)),

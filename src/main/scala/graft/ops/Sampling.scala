@@ -129,8 +129,9 @@ object Sampling {
     * straddle train/test (a test doc with a 95%-identical twin in train
     * is contamination [[assignSplit]]'s per-doc content hash cannot
     * prevent — the twins hash differently). Assign splits at the
-    * NEAR-DUP-CLUSTER level instead: connected components over the
-    * similarity pairs pick a representative (min id) per cluster, every
+    * NEAR-DUP-CLUSTER level instead: connected components
+    * ([[Graph.connectedComponents]]) over the similarity pairs pick a
+    * representative (min id, the `comp` label) per cluster, every
     * member inherits the representative, and the split is keyed off the
     * representative's id — so a whole cluster moves together, and
     * singletons (docs in no pair) behave exactly like [[assignSplit]] on
@@ -144,7 +145,7 @@ object Sampling {
   def clusterSafeSplits(docs: DataFrame, id: Column, pairs: DataFrame,
                         idA: Column, idB: Column,
                         splits: Seq[(String, Double)]): DataFrame = {
-    val comps = Graph.dedupClusters(pairs, idA, idB)
+    val comps = Graph.connectedComponents(pairs, idA, idB)
       .select(col("id").as("_cid"), col("comp"))
     docs.select(id.as("doc_id"))
       .join(comps, col("doc_id") === col("_cid"), "left")

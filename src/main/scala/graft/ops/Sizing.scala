@@ -221,8 +221,8 @@ object Sizing {
     // explode, which a join bounds by the SUM of its inputs — so joins
     // sum, everything else passes through, leaves report their stats.
     // (A join-estimate already swallowed by a lineage cut is invisible
-    // here — stage-boundary callers pass an explicit width instead, see
-    // minhashDupPairs.partsHint.)
+    // here — stage-boundary callers size from their source scan instead,
+    // see minhashDupPairs.sizeSrc.)
     // Deliberate trade: summing RAW leaf sizes ignores the projection/
     // filter scaling the old top-of-plan stats applied, so a narrow
     // select over a wide table estimates the full file and can OVER-pin

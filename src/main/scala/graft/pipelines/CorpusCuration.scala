@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Checkpoints, Dedup, Graph, Relational, Sampling, Sizing, TextAnalytics}
+import graft.ops.{Checkpoints, Dedup, Graph, Relational, Sampling, TextAnalytics}
 
 /** End-to-end training-corpus curation — the capstone composition of the
   * pipeline operators, in the order a production curation runs:
@@ -15,8 +15,8 @@ import graft.ops.{Checkpoints, Dedup, Graph, Relational, Sampling, Sizing, TextA
   *   2. quality filter ([[TextAnalytics.qualityFilter]]) on the survivors
   *      → `low_quality`;
   *   3. NEAR-dup: MinHash+LSH pairs ([[Dedup.minhashDupPairs]]) →
-  *      connected components ([[Graph.dedupClusters]]), min-id keeper per
-  *      cluster → `near_dup`;
+  *      connected components ([[Graph.connectedComponents]]), min-id
+  *      keeper per cluster, every other member → `near_dup`;
   *   4. survivors (`keep`) get a deterministic train/val/test split
   *      ([[Sampling.assignSplit]]); dropped rows carry split `none`.
   *
@@ -67,21 +67,16 @@ object CorpusCuration {
     val s2 = s1v.filter(col("keep")).select(col("doc_id"), col("text"))
 
     // 3. near-dup clustering (pairs → components → min-id keeper).
-    // Width hint from the SOURCE frame: s2 sits behind two lineage cuts
+    // Size source = the SOURCE frame: s2 sits behind two lineage cuts
     // whose carried stats include a join estimate — the width estimator
     // reading them pinned the minhash stages to 32768 near-empty tasks
-    // (165 s on 100k rows, PROBE.md round 13); the corpus scan's own
-    // stats are the honest volume signal.
-    val mparts = Sizing.explodedShuffleParts(base, bytesPerRow = 75L)
-    // gateSrc for the same reason as partsHint: s2's carried join-estimate
-    // stats must not decide the shared-kernel gate either (r20 — the
-    // inflated estimate opened it on a sub-MB corpus, re-adding the eager
-    // cut + verify jobs verdict r19 #1 charged)
+    // (165 s on 100k rows, PROBE.md round 13), and the same inflated
+    // estimate opened the shared-kernel gate on a sub-MB corpus (r20);
+    // the corpus scan's own stats are the honest volume signal.
     val pairs = Dedup.minhashDupPairs(s2, col("doc_id"), col("text"),
-      partsHint = Some(mparts), ordered = false, // feeds components only
-      gateSrc = Some(base))
-    val nearDropped = Graph.dedupClusters(pairs, col("id_a"), col("id_b"))
-      .filter(!col("keep"))
+      sizeSrc = Some(base), ordered = false) // feeds components only
+    val nearDropped = Graph.connectedComponents(pairs, col("id_a"), col("id_b"))
+      .filter(col("id") =!= col("comp"))
       .select(col("id").as("doc_id"), lit("near_dup").as("status"),
         lit("none").as("split"))
 

@@ -8,7 +8,8 @@ import org.apache.spark.util.Utils
   * its own packages: the `private[sql]` `classic.ExpressionUtils` between
   * graft's custom Catalyst expressions and the public Column API (Spark 4
   * removed `new Column(expr)`), and the `private[spark]` local-dir
-  * resolution of `util.Utils` and shuffle cleanup of `ContextCleaner`.
+  * resolution of `util.Utils`, shuffle cleanup of `ContextCleaner` and
+  * drain of the `LiveListenerBus`.
   * Hence this one-file shim living in the `org.apache.spark.sql` package
   * (the conventional pattern for Spark extension libraries).
   */
@@ -30,4 +31,10 @@ object GraftExpressionBridge {
     spark.sparkContext.cleaner.foreach { c =>
       shuffleIds.foreach(c.doCleanupShuffle(_, blocking = false))
     }
+
+  /** Block until the listener bus has delivered every event posted so
+    * far; throws `java.util.concurrent.TimeoutException` when it has not
+    * within `timeoutMillis` (10 s, Spark's own default). */
+  def waitUntilEmpty(spark: SparkSession, timeoutMillis: Long = 10000L): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMillis)
 }

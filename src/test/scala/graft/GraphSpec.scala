@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.ops.{Checkpoints, Graph}
+import graft.ops.{Checkpoints, CheckpointsSpec, Graph}
 
 /** Connected components / dedup clustering over similarity-pair edges. */
 class GraphSpec extends SparkSpec {
@@ -21,19 +21,12 @@ class GraphSpec extends SparkSpec {
   }
 
   test("components: long path needs multiple propagation rounds") {
-    // path 0-1-2-...-9: min label must travel 9 hops
-    val e = edges((0 until 9).map(i => (i.toLong, i + 1L)))
+    // path 0-1-2-...-7: min label must travel 7 hops, the longest path
+    // label propagation settles inside its budget
+    val e = edges((0 until 7).map(i => (i.toLong, i + 1L)))
     val out = Graph.connectedComponents(e, col("a"), col("b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out.size == 10 && out.values.forall(_ == 0L))
-  }
-
-  test("dedupClusters: keep flag marks exactly the min id per cluster") {
-    val e = edges(Seq((5L, 9L), (9L, 7L), (100L, 101L)))
-    val out = Graph.dedupClusters(e, col("a"), col("b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(out == Set((5L, 5L, true), (9L, 5L, false), (7L, 5L, false),
-      (100L, 100L, true), (101L, 100L, false)))
+    assert(out.size == 8 && out.values.forall(_ == 0L))
   }
 
   test("star contraction survives a 10k-node chain in O(log² n) rounds") {
@@ -58,33 +51,46 @@ class GraphSpec extends SparkSpec {
     assert(rounds <= 20, s"star contraction took $rounds rounds on a 10k chain")
   }
 
-  test("dedupClusters auto-switch: near-clique routes lp, long chain " +
-    "falls back to star with a correct keep list") {
+  /** The (id, comp) labels of a routed components run, and its route. */
+  private def labelled(run: (org.apache.spark.sql.DataFrame, String))
+      : (Map[Long, Long], String) =
+    (run._1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, run._2)
+
+  test("components route: near-clique takes lp, a long chain takes star") {
     // near-clique similarity shape → label propagation converges inside
     // the budget and the star premium is never paid
     val clique = edges(Seq((5L, 9L), (9L, 7L), (5L, 7L), (100L, 101L)))
-    val (cOut, cRoute) = Graph.dedupClustersRouted(clique, col("a"), col("b"))
-    assert(cRoute == "lp", "near-clique graph must stay on label propagation")
-    assert(cOut.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet ==
-      Set((5L, 5L, true), (9L, 5L, false), (7L, 5L, false),
-        (100L, 100L, true), (101L, 100L, false)))
-    // 2k-node chain: lp budget (8 rounds) cannot reach the fixpoint —
-    // the production path must discard and re-route through star
-    // contraction, still emitting the exact min-id keep list
+    assert(labelled(Graph.connectedComponentsRouted(clique, col("a"),
+      col("b"))) == (Map(5L -> 5L, 9L -> 5L, 7L -> 5L, 100L -> 100L,
+      101L -> 100L), "lp"))
+    // 2k-node chain: the lp budget (8 rounds) cannot reach the fixpoint —
+    // the partial labels are discarded and star contraction runs, still
+    // emitting the exact min-id labels
     val n = 2000L
     val chain = spark.range(n - 1)
       .select(col("id").as("a"), (col("id") + 1L).as("b"))
-    val (sOut, sRoute) = Graph.dedupClustersRouted(chain, col("a"), col("b"))
+    val (sOut, sRoute) =
+      Graph.connectedComponentsRouted(chain, col("a"), col("b"))
     assert(sRoute == "star", "long chain must fall back to star contraction")
     import org.apache.spark.sql.functions.count_if
-    val r = sOut.agg(count_if(col("comp") === 0L), count_if(col("keep")))
+    val r = sOut.agg(count_if(col("comp") === 0L),
+        count_if(col("id") === col("comp")))
       .collect()(0)
     assert(r.getLong(0) == n && r.getLong(1) == 1L)
   }
 
-  test("property: both auto-switch routes emit identical keep lists on " +
-    "random graphs (lp-forced vs star-forced)") {
+  test("components route at the budget: 7 hops take lp, 8 hops take star") {
+    // 7 hops = 7 label-changing rounds + the round that confirms = the
+    // whole 8-round budget; one hop more cannot confirm inside it
+    def path(hops: Int) = edges((0 until hops).map(i => (i.toLong, i + 1L)))
+    def allMin(hops: Int) = (0L to hops.toLong).map(_ -> 0L).toMap
+    def route(hops: Int) =
+      labelled(Graph.connectedComponentsRouted(path(hops), col("a"), col("b")))
+    assert(route(7) == (allMin(7), "lp"))
+    assert(route(8) == (allMin(8), "star"))
+  }
+
+  test("property: lp-forced and star-forced routes emit identical labels") {
     import org.scalacheck.{Gen, Prop}
     // ids ≤ 15 bound the diameter, so lpBudget=50 always converges (lp
     // route) while lpBudget=1 converges only on already-stable label
@@ -94,10 +100,8 @@ class GraphSpec extends SparkSpec {
     val graphGen = Gen.choose(1, 20).flatMap(n => Gen.listOfN(n, pairGen))
     checkProp(Prop.forAll(graphGen) { pairs =>
       val e = edges(pairs)
-      def run(budget: Int) =
-        Graph.dedupClustersRouted(e, col("a"), col("b"), lpBudget = budget)
-          ._1.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      def run(budget: Int) = labelled(Graph.connectedComponentsRouted(e,
+        col("a"), col("b"), lpBudget = budget))._1
       run(50) == run(1)
     }, minTests = 6)
   }
@@ -171,11 +175,7 @@ class GraphSpec extends SparkSpec {
     "spark.graft.checkpoint.dir is set") {
     // so do the range-ranked Relational operators and countWithin's
     // prefix table: every cut under src/main goes through Checkpoints.cut
-    import graft.ops.{Checkpoints, RangeJoin, Relational}
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.conf.set(Checkpoints.DirConf, dir.toString)
-    // a session keeps its first resolved checkpoint dir: count files under
-    // the one in force, not under `dir`
+    import graft.ops.{RangeJoin, Relational}
     def ckptFiles(): Long = spark.sparkContext.getCheckpointDir.fold(0L) { d =>
       val stream = java.nio.file.Files.walk(
         java.nio.file.Paths.get(new java.net.URI(d)))
@@ -188,7 +188,7 @@ class GraphSpec extends SparkSpec {
       assert(ckptFiles() > before, s"$what wrote no reliable checkpoint files")
       out
     }
-    try {
+    CheckpointsSpec.withCheckpointDir(spark) {
       val e = edges(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
       val out = landed("connectedComponents") {
         Graph.connectedComponents(e, col("a"), col("b"))
@@ -210,7 +210,7 @@ class GraphSpec extends SparkSpec {
       // ts = 3·id: within ±6 s are the ids ±1 and ±2, minus the row itself
       assert(counts == (0L until 40L).map(i =>
         i -> ((i - 2L).max(0L) to (i + 2L).min(39L)).count(_ != i).toLong).toMap)
-    } finally spark.conf.unset(Checkpoints.DirConf)
+    }
   }
 
   test("star contraction: 100-node path converges in O(log² n) rounds " +
@@ -267,8 +267,10 @@ class GraphSpec extends SparkSpec {
       val e = edges(pairs)
       val star = Graph.connectedComponentsStar(e, col("a"), col("b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val label = Graph.connectedComponents(e, col("a"), col("b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // a budget past the 9-hop chain keeps the router on propagation
+      val (label, route) = labelled(Graph.connectedComponentsRouted(e,
+        col("a"), col("b"), lpBudget = 50))
+      assert(route == "lp")
       assert(star == label, s"divergence on $pairs")
     }
   }

@@ -1,11 +1,13 @@
 package graft.ops
 
+import java.net.URI
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.MapOutputProbe
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.functions._
@@ -36,9 +38,18 @@ class CheckpointsSpec extends SparkSpec {
 
   test("a reliable cut unregisters the shuffle its execution wrote and " +
     "reads back the same rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.conf.set(Checkpoints.DirConf, dir.toString)
-    try assertCutFrees() finally spark.conf.unset(Checkpoints.DirConf)
+    withCheckpointDir(spark)(assertCutFrees())
+  }
+
+  test("a released reliable cut's checkpoint files are deleted") {
+    withCheckpointDir(spark) {
+      val cut = Checkpoints.cut(spark.range(0, 100, 1, 2).toDF())
+      val rdd = cut.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+      val files = rdd.getCheckpointFile.map(f => Paths.get(new URI(f)))
+      assert(files.exists(Files.isDirectory(_)), s"no rdd-${rdd.id} directory")
+      Checkpoints.release(cut)
+      assert(!Files.exists(files.get))
+    }
   }
 
   test("a released cut is gone from the persistent RDDs") {
@@ -52,6 +63,26 @@ class CheckpointsSpec extends SparkSpec {
 }
 
 object CheckpointsSpec extends AdaptiveSparkPlanHelper {
+
+  /** `body` with reliable cuts written under a fresh temporary directory,
+    * deleted afterwards. The context's checkpoint directory is pointed
+    * there too: a context otherwise keeps the first one it resolved. */
+  def withCheckpointDir[T](spark: SparkSession)(body: => T): T = {
+    val dir = Files.createTempDirectory("graft-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    spark.conf.set(Checkpoints.DirConf, dir.toString)
+    try body
+    finally {
+      spark.conf.unset(Checkpoints.DirConf)
+      deleteTree(dir)
+    }
+  }
+
+  private def deleteTree(root: Path): Unit = {
+    val paths = Files.walk(root)
+    try paths.iterator.asScala.toSeq.reverse.foreach(Files.delete)
+    finally paths.close()
+  }
 
   /** `body`'s result and the ids of the shuffles every lineage cut run
     * inside it wrote, read off each cut's executed plan. */
@@ -69,9 +100,7 @@ object CheckpointsSpec extends AdaptiveSparkPlanHelper {
     val out = try {
       val r = body
       // QueryExecutionListener delivery is asynchronous; drain the bus
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
+      GraftExpressionBridge.waitUntilEmpty(spark, 60000L)
       r
     } finally spark.listenerManager.unregister(listener)
     (out, ids.asScala.toSet)

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.{DataFrame, Encoder, GraftExpressionBridge}
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, Expression, LambdaFunction, Literal, Multiply, StringSplit, Subtract, ZipWith}
 import org.apache.spark.sql.catalyst.expressions.codegen.{ByteCodeStats, CodegenFallback}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -66,9 +66,7 @@ class CodegenFallbackSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       body.collect()
       // QueryExecutionListener delivery is asynchronous; drain the bus
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
+      GraftExpressionBridge.waitUntilEmpty(spark, 60000L)
     } finally spark.listenerManager.unregister(listener)
     val ps = plans.asScala.toSeq
     assert(ps.nonEmpty)
