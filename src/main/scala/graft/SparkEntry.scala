@@ -1281,9 +1281,11 @@ object SparkEntry {
 
     // ---- dedup clusters: similarity pairs → connected components → keep
     // list (min-id representative per cluster; Graph.scala scaladoc).
-    // The routed production entry: near-clique near-dup graphs converge
-    // inside the label-propagation budget, and dedup_components_star forces
-    // the star route, so both algorithms stay under one recursive-CTE oracle
+    // The routed production entry: a near-dup graph under the driver bound
+    // (Sizing.LocalComponentsEdges; ~5k edges at sf0.1) is labelled by
+    // union-find on the driver, a larger near-clique one converges inside
+    // the label-propagation budget, and dedup_components_star forces the
+    // star route, so the algorithms stay under one recursive-CTE oracle
     "dedup_components" -> ((s, dir) =>
       Graph.connectedComponents(nearDupEdges(dupCorpus(s, dir)), col("id_a"), col("id_b"))
         .select(col("id"), col("comp"), (col("id") === col("comp")).as("keep"))

@@ -57,10 +57,12 @@ object Checkpoints {
 
   /** Drop a cut's blocks and delete a reliable cut's checkpoint files.
     * `cutDf` must be a frame [[cut]] returned, and no live frame may still
-    * read it: reading a released cut fails. */
+    * read it: reading a released cut fails. The blocks go through the
+    * context directly, not `RDD.unpersist`, which warns on every local cut
+    * that its lineage cannot be recomputed — the reason it is released. */
   def release(cutDf: DataFrame): Unit = cutDf.queryExecution.logical match {
     case r: LogicalRDD =>
-      r.rdd.unpersist(blocking = false)
+      GraftExpressionBridge.unpersistRDD(cutDf.sparkSession, r.rdd.id, blocking = false)
       r.rdd.getCheckpointFile.foreach { f =>
         val path = new Path(f)
         path.getFileSystem(cutDf.sparkSession.sparkContext.hadoopConfiguration)

@@ -140,16 +140,20 @@ object Dedup {
       case Some(n) => banded.repartition(n, col("band"), col("bucket"))
       case None => banded
     }
+    // sort_array, not array_sort: the default-comparator ArraySort is an
+    // interpreted higher-order function; collect_list drops nulls, so both
+    // give the same order
     val aggregated = pinned.groupBy("band", "bucket")
-      .agg(array_sort(collect_list(idCol)).as("ids"))
+      .agg(sort_array(collect_list(idCol)).as("ids"))
     val grouped = observeCap(aggregated, size(col("ids")), maxBucket)
       .filter(size(col("ids")).between(2, maxBucket))
+    // every id paired with each id after it: two codegen'd generators, no
+    // lambda (the last id's slice starts past the end and is empty)
     val rawPairs = grouped
-      .select(explode(flatten(transform(sequence(lit(0), size(col("ids")) - 2),
-        i => transform(slice(col("ids"), i + 2, size(col("ids")) - i - 1),
-          b => struct(element_at(col("ids"), i + 1).as("id_a"), b.as("id_b"))))))
-        .as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id_a")))
+      .select(col("id_a"),
+        explode(slice(col("ids"), col("i") + 2, size(col("ids")) - col("i") - 1))
+          .as("id_b"))
     val pairs = pairFilter.fold(rawPairs)(f =>
       rawPairs.filter(f(col("id_a"), col("id_b"))))
     // pinned callers also pin the pair dedup: its shuffle input is many

@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Graph operators over edge lists — the step that turns pairwise
   * similarity output (minhash/simhash/embedding dup PAIRS) into usable
@@ -10,7 +14,11 @@ import org.apache.spark.sql.functions._
   * (`id === comp` keeps).
   *
   * [[connectedComponents]] is the one components entry. It routes between
-  * two algorithms, both Pregel semantics expressed as DataFrame joins:
+  * three algorithms:
+  *  - driver union-find ([[localLabels]]) when the edge list holds at most
+  *    [[Sizing.LocalComponentsEdges]] edges: one bounded collect, no
+  *    rounds at all — the size-based physical choice a broadcast join
+  *    makes for a small side;
   *  - min-label propagation (each round every node adopts the smallest
   *    label in its closed neighborhood, one equi-join + one groupBy-min
   *    over the edge list, a one-row convergence sum per round). Rounds
@@ -19,6 +27,7 @@ import org.apache.spark.sql.functions._
   *  - alternating large-star/small-star contraction ([[starContraction]],
   *    O(log² n) rounds on any diameter), for the adversarial long-chain
   *    graphs where label propagation pays one round per hop.
+  * The last two are Pregel semantics expressed as DataFrame joins.
   */
 object Graph {
 
@@ -26,9 +35,13 @@ object Graph {
     * Edges are treated as undirected; isolated nodes (absent from the
     * edge list) are not emitted.
     *
-    * Routing: min-label propagation under a fixed [[LpBudget]]-round
-    * budget; if the fixpoint is not reached, the graph has a long path —
-    * the partial labels are discarded (never returned: one real cluster
+    * Routing: an edge list of at most [[Sizing.LocalComponentsEdges]]
+    * edges, none with a null endpoint, is labelled on the driver and
+    * returned as a local frame; the driver never holds more than that
+    * bound plus one edge. A larger list (or one with a null endpoint)
+    * runs min-label propagation under a fixed [[LpBudget]]-round budget;
+    * if the fixpoint is not reached, the graph has a long path — the
+    * partial labels are discarded (never returned: one real cluster
     * reported as several means duplicate keepers downstream) and star
     * contraction runs instead. The common dedup graph is near-clique
     * (minhash clusters, 2–4 propagation rounds at about half a star
@@ -36,8 +49,8 @@ object Graph {
     * propagation isolated on the sf0.1 cluster_safe_splits chain, r10→r11
     * adjudication), so it never pays the star premium; an adversarial
     * transitive-boilerplate chain pays the budget's cheap rounds (~20% of
-    * its star cost). Both routes share one lineage-cut edge list, so the
-    * expensive upstream (minhash etc.) runs once regardless of route. */
+    * its star cost). Every route starts from one lineage-cut edge list, so
+    * the expensive upstream (minhash etc.) runs once regardless of route. */
   def connectedComponents(edges: DataFrame, src: Column, dst: Column)
       : DataFrame =
     connectedComponentsRouted(edges, src, dst)._1
@@ -46,20 +59,60 @@ object Graph {
     * re-routes to star contraction. */
   private val LpBudget = 8
 
-  /** [[connectedComponents]] plus the route taken ("lp" | "star") — the
-    * spec entry point pinning the routing rule. */
+  /** [[connectedComponents]] plus the route taken ("local" | "lp" |
+    * "star") — the spec entry point pinning the routing rule. Specs force
+    * the distributed routes with `localBound = 0`. */
   private[graft] def connectedComponentsRouted(edges: DataFrame, src: Column,
-      dst: Column, lpBudget: Int = LpBudget): (DataFrame, String) = {
+      dst: Column, lpBudget: Int = LpBudget,
+      localBound: Int = Sizing.LocalComponentsEdges): (DataFrame, String) = {
     require(lpBudget > 0, s"lpBudget must be positive, got $lpBudget")
+    require(localBound >= 0 && localBound < Int.MaxValue,
+      s"localBound must be in [0, Int.MaxValue), got $localBound")
     // cut the caller's lineage ONCE before symmetrization: both union
     // branches reference the edge list, and similarity-pair inputs carry
     // an expensive pipeline (minhash etc.) that would otherwise run twice
     // inside the first materialization job
     val base = cutEdges(edges, src, dst)
-    val (lp, converged) = labelPropagation(base, lpBudget)
-    // the losing route's cuts go; star labels still read base
-    if (converged) { Checkpoints.release(base); (lp, "lp") }
-    else { Checkpoints.release(lp); (starContraction(base, StarMaxIter)._1, "star") }
+    localLabels(base, localBound) match {
+      case Some(labels) => Checkpoints.release(base); (labels, "local")
+      case None =>
+        val (lp, converged) = labelPropagation(base, lpBudget)
+        // the losing route's cuts go; star labels still read base
+        if (converged) { Checkpoints.release(base); (lp, "lp") }
+        else { Checkpoints.release(lp); (starContraction(base, StarMaxIter)._1, "star") }
+    }
+  }
+
+  /** (id, comp) of a cut (a, b) edge list by union-find on the driver, as
+    * a local frame — or None when `base` holds more than `bound` edges or
+    * an edge with a null endpoint (those keep the distributed routes'
+    * null semantics). At most `bound + 1` rows reach the driver. Roots are
+    * always the smaller id (a union hangs the larger root under the
+    * smaller), so a node's root is its component's min id; finds compress
+    * the path iteratively, since a chain fed in reverse order builds a
+    * tree as deep as the chain. */
+  private def localLabels(base: DataFrame, bound: Int): Option[DataFrame] = {
+    val rows = base.limit(bound + 1).collect()
+    if (rows.length > bound || rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      return None
+    val parent = new mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var root = x
+      while (parent.getOrElseUpdate(root, root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    rows.foreach { r =>
+      val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val labels = parent.keys.toArray.map(id => Row(id, find(id)))
+    // label propagation's schema: id as nullable as the edge columns, comp
+    // (a min aggregate there) nullable
+    Some(base.sparkSession.createDataFrame(labels.toSeq.asJava, StructType(Seq(
+      StructField("id", LongType, base.schema.exists(_.nullable)),
+      StructField("comp", LongType)))))
   }
 
   /** The (a, b) long edge list every component operator starts from,
@@ -70,7 +123,9 @@ object Graph {
   /** Min-label propagation over a pre-normalized, lineage-cut (a, b) edge
     * list: (labels, reached-fixpoint). Labels are PARTIAL when the flag is
     * false — [[connectedComponentsRouted]] discards them and re-routes.
-    * The labels are the only cut left behind; `base` stays the caller's. */
+    * The labels are the only cut left behind; `base` stays the caller's,
+    * and every round releases the labels it replaces (`sym` is a cut of
+    * its own, so nothing re-reads them). */
   private def labelPropagation(base: DataFrame, maxIter: Int)
       : (DataFrame, Boolean) = {
     // closed neighborhood via explicit self-loops: each round is then ONE
@@ -82,9 +137,8 @@ object Graph {
     // previous round's labels, so an uncut lineage grows per round —
     // exponential plan size by round ~20. Checkpointing truncates the plan
     // to the materialized result, keeping every round's plan constant-size.
-    val initial = Checkpoints.cut(undirected.select(col("a").as("id"))
+    var labels = Checkpoints.cut(undirected.select(col("a").as("id"))
       .distinct().withColumn("comp", col("id")))
-    var labels = initial
     // ONE distinct (r19 opt): the old shape dedup'd the full 4|E|-row
     // symmetrized+self-loop stream AND ran a second distinct for the label
     // init — but the groupBy-min below is idempotent under duplicate
@@ -92,9 +146,12 @@ object Graph {
     // from the already-distinct label table, and duplicate caller edges
     // only add rows to the min aggregate (same labels, same convergence
     // sums). Callers here feed ordered, distinct similarity pairs anyway.
-    val sym = undirected
-      .union(labels.select(col("id").as("a"), col("id").as("b")))
-      .persist()
+    // Cut, not persist: materialized before round 1, so round 1 plans
+    // against a finished table instead of racing its first fill — a lazily
+    // filled sym gave that round one of two plans, and the query one of
+    // two shuffle-record totals, from run to run.
+    val sym = Checkpoints.cut(undirected
+      .union(labels.select(col("id").as("a"), col("id").as("b"))))
     // labels only ever decrease, so an unchanged exact SUM of labels ⇔ no
     // label changed — one scalar aggregate per round instead of a compare
     // join (decimal: a long sum overflows at ~1e6 nodes with 1e15 ids)
@@ -113,13 +170,11 @@ object Graph {
       val nextSum = labelSum(next)
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
-      // the initial labels stay while the persisted sym may re-read them
-      if (labels ne initial) Checkpoints.release(labels)
+      Checkpoints.release(labels)
       labels = next
       iter += 1
     }
-    sym.unpersist(blocking = false)
-    Checkpoints.release(initial)
+    Checkpoints.release(sym)
     (labels, converged)
   }
 

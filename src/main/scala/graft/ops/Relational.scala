@@ -533,7 +533,8 @@ object Relational {
     * rank WITHIN each partition in parallel, then add each partition's
     * start offset. The only driver state is one (partition, count) row
     * per shuffle partition — O(partitions), same class as the
-    * convergence scalar in [[Graph.connectedComponents]]. The checkpoint
+    * per-round convergence scalar of [[Graph.connectedComponents]]' label
+    * propagation. The checkpoint
     * pins the sampled partition assignment so the offset pass and the
     * rank pass see identical partitioning (range boundary sampling is
     * re-run per action otherwise). Callers should pre-project to the

@@ -138,9 +138,12 @@ object Sampling {
     * their own id.
     *
     * Output: one (doc_id, rep, split) row per input doc — a doc-level
-    * dimension to join back onto the corpus. Scale: components is the
-    * lineage-checkpointed iterative operator (pairs-sized, not
-    * corpus-sized); the join back is a single keyed shuffle.
+    * dimension to join back onto the corpus. Scale: components is
+    * pairs-sized, not corpus-sized — a pair list of at most
+    * `Sizing.LocalComponentsEdges` edges is labelled on the driver and
+    * joins back as a local frame, a larger one runs the
+    * lineage-checkpointed iterative rounds; the join back is a single
+    * keyed shuffle.
     */
   def clusterSafeSplits(docs: DataFrame, id: Column, pairs: DataFrame,
                         idA: Column, idB: Column,

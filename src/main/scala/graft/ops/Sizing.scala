@@ -42,6 +42,12 @@ object Sizing {
     * [[widenKernelStage]]. */
   val KernelBytesPerTask: Long = 256L << 10
 
+  /** Edges up to which [[Graph.connectedComponents]] collects the edge
+    * list and labels it on the driver (union-find), in place of the
+    * distributed rounds. At this bound a chain labels in 8.5 s on the
+    * driver route against 111 s distributed (local[4], 4-core box). */
+  val LocalComponentsEdges: Int = 1 << 20
+
   /** Runtime-conf parse with a clear failure: a typo'd value (e.g.
     * "64m") must name the conf key at the call boundary, not throw a bare
     * NumberFormatException from deep inside a production query

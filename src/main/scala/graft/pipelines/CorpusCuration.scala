@@ -28,8 +28,11 @@ import graft.ops.{Checkpoints, Dedup, Graph, Relational, Sampling, TextAnalytics
   * the composition is itself oracle-checked end-to-end (`corpus_curation`).
   *
   * Scale notes: stages are narrow or key-shuffled exactly like their
-  * underlying operators; the only driver state is the components loop's
-  * convergence scalar. The stage boundaries here use `localCheckpoint`
+  * underlying operators; the only driver state is the components step's:
+  * a near-dup edge list of at most `Sizing.LocalComponentsEdges` edges
+  * is collected and labelled on the driver (union-find), a larger one
+  * keeps its distributed rounds and their per-round convergence scalar.
+  * The stage boundaries here use `localCheckpoint`
   * (fast, but NOT fault-tolerant: blocks live unreplicated on executors,
   * so a lost executor fails the query); on a real cluster swap in
   * reliable `checkpoint()` to an HDFS/object-store dir, which survives

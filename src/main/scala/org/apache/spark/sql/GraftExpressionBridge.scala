@@ -8,8 +8,8 @@ import org.apache.spark.util.Utils
   * its own packages: the `private[sql]` `classic.ExpressionUtils` between
   * graft's custom Catalyst expressions and the public Column API (Spark 4
   * removed `new Column(expr)`), and the `private[spark]` local-dir
-  * resolution of `util.Utils`, shuffle cleanup of `ContextCleaner` and
-  * drain of the `LiveListenerBus`.
+  * resolution of `util.Utils`, shuffle cleanup of `ContextCleaner`, block
+  * release of `SparkContext` and drain of the `LiveListenerBus`.
   * Hence this one-file shim living in the `org.apache.spark.sql` package
   * (the conventional pattern for Spark extension libraries).
   */
@@ -31,6 +31,12 @@ object GraftExpressionBridge {
     spark.sparkContext.cleaner.foreach { c =>
       shuffleIds.foreach(c.doCleanupShuffle(_, blocking = false))
     }
+
+  /** Drop an RDD's blocks, as `RDD.unpersist` does, without its warning
+    * that a locally checkpointed RDD cannot be recomputed: for a released
+    * lineage cut that is the intent, not a hazard. */
+  def unpersistRDD(spark: SparkSession, rddId: Int, blocking: Boolean): Unit =
+    spark.sparkContext.unpersistRDD(rddId, blocking)
 
   /** Block until the listener bus has delivered every event posted so
     * far; throws `java.util.concurrent.TimeoutException` when it has not

@@ -58,11 +58,12 @@ class GraphSpec extends SparkSpec {
 
   test("components route: near-clique takes lp, a long chain takes star") {
     // near-clique similarity shape → label propagation converges inside
-    // the budget and the star premium is never paid
+    // the budget and the star premium is never paid (localBound = 0 keeps
+    // every non-empty graph off the driver route, here and below)
     val clique = edges(Seq((5L, 9L), (9L, 7L), (5L, 7L), (100L, 101L)))
     assert(labelled(Graph.connectedComponentsRouted(clique, col("a"),
-      col("b"))) == (Map(5L -> 5L, 9L -> 5L, 7L -> 5L, 100L -> 100L,
-      101L -> 100L), "lp"))
+      col("b"), localBound = 0)) == (Map(5L -> 5L, 9L -> 5L, 7L -> 5L,
+      100L -> 100L, 101L -> 100L), "lp"))
     // 2k-node chain: the lp budget (8 rounds) cannot reach the fixpoint —
     // the partial labels are discarded and star contraction runs, still
     // emitting the exact min-id labels
@@ -70,7 +71,7 @@ class GraphSpec extends SparkSpec {
     val chain = spark.range(n - 1)
       .select(col("id").as("a"), (col("id") + 1L).as("b"))
     val (sOut, sRoute) =
-      Graph.connectedComponentsRouted(chain, col("a"), col("b"))
+      Graph.connectedComponentsRouted(chain, col("a"), col("b"), localBound = 0)
     assert(sRoute == "star", "long chain must fall back to star contraction")
     import org.apache.spark.sql.functions.count_if
     val r = sOut.agg(count_if(col("comp") === 0L),
@@ -85,25 +86,60 @@ class GraphSpec extends SparkSpec {
     def path(hops: Int) = edges((0 until hops).map(i => (i.toLong, i + 1L)))
     def allMin(hops: Int) = (0L to hops.toLong).map(_ -> 0L).toMap
     def route(hops: Int) =
-      labelled(Graph.connectedComponentsRouted(path(hops), col("a"), col("b")))
+      labelled(Graph.connectedComponentsRouted(path(hops), col("a"), col("b"),
+        localBound = 0))
     assert(route(7) == (allMin(7), "lp"))
     assert(route(8) == (allMin(8), "star"))
   }
 
-  test("property: lp-forced and star-forced routes emit identical labels") {
+  test("property: the driver route, lp-forced and star-forced routes emit " +
+    "identical labels, self-loops, duplicates and negative ids included") {
     import org.scalacheck.{Gen, Prop}
-    // ids ≤ 15 bound the diameter, so lpBudget=50 always converges (lp
-    // route) while lpBudget=1 converges only on already-stable label
-    // sets (star route for anything with structure) — the same fixpoint
-    // must come out either way, self-loops and duplicates included
-    val pairGen = Gen.zip(Gen.choose(0L, 15L), Gen.choose(0L, 15L))
+    // ids in [-8, 12] bound the diameter, so lpBudget=50 always converges
+    // (lp route) while lpBudget=1 converges only on already-stable label
+    // sets (star route for anything with structure); localBound=64 holds
+    // every generated graph on the driver — the same fixpoint must come
+    // out all three ways
+    val pairGen = Gen.zip(Gen.choose(-8L, 12L), Gen.choose(-8L, 12L))
     val graphGen = Gen.choose(1, 20).flatMap(n => Gen.listOfN(n, pairGen))
     checkProp(Prop.forAll(graphGen) { pairs =>
-      val e = edges(pairs)
-      def run(budget: Int) = labelled(Graph.connectedComponentsRouted(e,
-        col("a"), col("b"), lpBudget = budget))._1
-      run(50) == run(1)
+      val e = edges(pairs ++ pairs.take(2))
+      def run(budget: Int, bound: Int) = labelled(Graph.connectedComponentsRouted(
+        e, col("a"), col("b"), lpBudget = budget, localBound = bound))
+      val (local, route) = run(8, bound = 64)
+      route == "local" && local == run(50, 0)._1 && local == run(1, 0)._1
     }, minTests = 6)
+  }
+
+  test("components route at the driver bound: bound edges take local, " +
+    "bound + 1 take the distributed route") {
+    // a 6-edge path: its 7 nodes all label 0 on either route
+    val e = edges((0 until 6).map(i => (i.toLong, i + 1L)))
+    def route(bound: Int) =
+      labelled(Graph.connectedComponentsRouted(e, col("a"), col("b"), localBound = bound))
+    val all = (0L to 6L).map(_ -> 0L).toMap
+    assert(route(6) == (all, "local"))
+    assert(route(5) == (all, "lp"))
+  }
+
+  test("components route: a null endpoint takes the distributed route") {
+    val e = spark.createDataFrame(Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, null), (3L, 4L))).toDF("a", "b")
+    val (labels, route) = Graph.connectedComponentsRouted(e, col("a"), col("b"))
+    assert(route == "lp")
+    val out = labels.filter(col("id").isNotNull).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
+  }
+
+  test("components: an empty edge list gives an empty (id, comp) frame " +
+    "with the distributed routes' schema") {
+    val (labels, route) = Graph.connectedComponentsRouted(
+      edges(Seq.empty[(Long, Long)]), col("a"), col("b"))
+    assert(route == "local" && labels.isEmpty)
+    val (lp, _) = Graph.connectedComponentsRouted(edges(Seq((1L, 2L))),
+      col("a"), col("b"), localBound = 0)
+    assert(labels.schema == lp.schema)
   }
 
   test("pageRank: integer micro-units match the hand/reference computation") {
@@ -191,7 +227,7 @@ class GraphSpec extends SparkSpec {
     CheckpointsSpec.withCheckpointDir(spark) {
       val e = edges(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
       val out = landed("connectedComponents") {
-        Graph.connectedComponents(e, col("a"), col("b"))
+        Graph.connectedComponentsRouted(e, col("a"), col("b"), localBound = 0)._1
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }
       assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
@@ -234,12 +270,17 @@ class GraphSpec extends SparkSpec {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     // path 0-1-...-6: six propagation rounds plus the one that confirms
-    val out = Graph.connectedComponents(
-      edges((0 until 6).map(i => (i.toLong, i + 1L))), col("a"), col("b"))
+    val path = edges((0 until 6).map(i => (i.toLong, i + 1L)))
+    val out = Graph.connectedComponentsRouted(path, col("a"), col("b"),
+      localBound = 0)._1
     val added = sc.getPersistentRDDs.keySet -- before
     assert(cutsRead(out).nonEmpty)
     assert(added == cutsRead(out))
     assert(out.collect().map(_.getLong(1)).toSet == Set(0L))
+    // the driver route reads no cut and leaves none
+    val local = Graph.connectedComponents(path, col("a"), col("b"))
+    assert(cutsRead(local).isEmpty)
+    assert(sc.getPersistentRDDs.keySet -- before == added)
   }
 
   test("star contraction leaves persisted only the cuts its labels read") {
@@ -269,7 +310,7 @@ class GraphSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // a budget past the 9-hop chain keeps the router on propagation
       val (label, route) = labelled(Graph.connectedComponentsRouted(e,
-        col("a"), col("b"), lpBudget = 50))
+        col("a"), col("b"), lpBudget = 50, localBound = 0))
       assert(route == "lp")
       assert(star == label, s"divergence on $pairs")
     }

@@ -185,7 +185,13 @@ class ScaleShapeSpec extends SparkSpec {
     // the content-dependent entries (pair volumes, splits size)
     val expected = Map(
       "props_k_stats" -> 10L,
-      "cluster_safe_splits" -> 3000L,
+      // 3000 → 1000 (and corpus_curation 2152 → 1000 below): the
+      // components labels of a pair list under Sizing.LocalComponentsEdges
+      // are a local frame with exact stats, so the labels join (here the
+      // doc left join, there the near-dup anti-join) broadcasts them
+      // instead of shuffling both sides into a sort-merge join; only the
+      // final orderBy's exchange is left, 1000 rows each
+      "cluster_safe_splits" -> 1000L,
       "price_percentiles" -> 6L,
       // r15: the prefix stream is now checkpointed so the pair-stage
       // width is sized from MEASURED candidate volume (sf3 width audit);
@@ -205,7 +211,7 @@ class ScaleShapeSpec extends SparkSpec {
       // machinery was gated, not this one.
       "jaccard_prefix_pairs" -> 26490L,
       "pq_ann_topk" -> 100L,
-      "corpus_curation" -> 2152L,
+      "corpus_curation" -> 1000L,
       "doc_pagerank_seeded" -> 1000L,
       // r14: join-based band-bucket pair generation — the Hamming verify
       // sits INSIDE the join, so only verified pairs reach the pair-dedup

@@ -7,6 +7,7 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, Encoder, GraftExpressionBridge}
 import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, Expression, LambdaFunction, Literal, Multiply, StringSplit, Subtract, ZipWith}
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
 import org.apache.spark.sql.catalyst.expressions.codegen.{ByteCodeStats, CodegenFallback}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -119,6 +120,17 @@ class CodegenFallbackSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(fallbacks(df.queryExecution.executedPlan) == 0)
     assert(df.filter(col("item_id") === 1L).select("qdist2", "adist2").as[(Long, Long)]
       .collect().toSeq == Seq((25L, 25L), (61L, 25L)))
+  }
+
+  test("bucketPairs' pair enumeration plans no CodegenFallback expression") {
+    // collect_list is an imperative aggregate, a CodegenFallback by type
+    // that no aggregate operator codegens; every per-row node must codegen
+    val banded = frame(Seq((0, 1L, 3L), (0, 1L, 1L), (0, 1L, 2L), (1, 7L, 3L),
+      (1, 7L, 2L), (1, 8L, 9L))).toDF("band", "bucket", "doc_id")
+    val df = Dedup.bucketPairs(banded, col("doc_id"), maxBucket = 10)
+    val nodes = expressions(df.queryExecution.executedPlan).flatMap(_.collect { case f: CodegenFallback => f })
+    assert(nodes.filterNot(_.isInstanceOf[CollectList]).isEmpty, nodes.map(_.prettyName))
+    assert(df.as[(Long, Long)].collect().toSet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
   test("k-means, doc stats and language ID: the tokenizer and the distance run codegen'd") {
